@@ -30,8 +30,7 @@ import org.apache.spark.sql.types._
   * parallelism exactly like [[RateSource]]'s numPartitions — downstream
   * operators inherit it until the first shuffle; `maxOffsetsPerTrigger`
   * is the admission cap that keeps a backlogged topic from producing an
-  * unboundedly large first micro-batch (the same bounded-batch
-  * discipline WindowStream's pump enforces on the facade path).
+  * unboundedly large first micro-batch.
   */
 object KafkaShaped {
 

@@ -1,18 +1,16 @@
 package graft.streaming
 
-import java.util.concurrent.{Executors, LinkedBlockingQueue, TimeUnit}
-import java.util.concurrent.atomic.AtomicBoolean
+import java.util.concurrent.{ExecutorService, Executors, LinkedBlockingQueue, Semaphore, TimeUnit}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicLong}
 
 import scala.collection.mutable.ArrayBuffer
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.{Encoder, SparkSession}
 
-/** The reference's pub/sub facade (SURVEY.md §2.1 S1–S7), re-expressed on
-  * Structured Streaming. API contract mirrors WindowPublisher:
+/** The reference's pub/sub facade (SURVEY.md §2.1 S1–S7). API contract
+  * mirrors WindowPublisher:
   *
   *  - `publish` blocks when the bounded ingest buffer is full — lossless,
   *    backpressured ingest (the reference spins on emitNext failure,
@@ -27,15 +25,21 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    routed to `errorConsumer` (WindowPublisher.java:142-150).
   *  - queue introspection (WindowPublisher.java:116-125).
   *
-  * Mechanism is redesigned per SURVEY.md §7.4: a pump thread drains the
-  * bounded queue into a MemoryStream in admission-capped slices (the
-  * maxOffsetsPerTrigger analogue), a ProcessingTime trigger provides the
-  * time axis, and chunking to `windowMaxBatchSize` provides the count
-  * axis, so every delivered batch has size ∈ [1, windowMaxBatchSize] —
-  * the reference's count-or-time window contract (bufferTimeout,
-  * WindowPublisher.java:70-72) with empty windows suppressed. Batches for
-  * the exact per-key count-or-time semantics go through
-  * [[CountOrTimeWindow]] instead.
+  * Delivery is the reference's own design (WindowPublisher.java:69-72,
+  * 155-169) on JDK concurrency: one batcher thread runs `bufferTimeout`
+  * — a window opens on its first item and closes at `windowMaxBatchSize`
+  * items or `windowDuration` after opening, so every batch has size ∈
+  * [1, windowMaxBatchSize] — and hands each window to `consumerParallelism`
+  * threads, blocking while all are busy; the queue then fills and
+  * `publish` blocks (the reference's backpressure chain). In flight: the
+  * queue + one open window + `consumerParallelism` windows.
+  *
+  * Not Structured Streaming: the facade is unicast, in-process and
+  * driver-resident, so a micro-batch engine would distribute nothing and
+  * only add its per-batch planning, WAL and offset commits (the D-Streams
+  * latency floor, ~110–170 ms per batch). Keyed, event-time and
+  * distributed windows go through [[CountOrTimeWindow]]. `spark` and the
+  * `Encoder` only keep the constructor's signature.
   */
 class WindowStream[T: Encoder](
     spark: SparkSession,
@@ -52,17 +56,21 @@ class WindowStream[T: Encoder](
     if (Integer.bitCount(queueCapacity) == 1) queueCapacity
     else Integer.highestOneBit(queueCapacity) * 2
 
+  private val id = System.identityHashCode(this)
   private val queue = new LinkedBlockingQueue[T](capacity)
-  private val source = MemoryStream[T](spark)
   private val subscribed = new AtomicBoolean(false)
   private val running = new AtomicBoolean(true)
-  @volatile private var query: StreamingQuery = _
-  @volatile private var pumpThread: Thread = _
-  @volatile private var pool: java.util.concurrent.ExecutorService = _
-  private val delivered = new java.util.concurrent.atomic.AtomicLong(0L)
-  // items the pump has moved into the MemoryStream (field, not pump-local:
-  // the timeout watchdog needs pending = pumped + queued − delivered)
-  private val pumpedN = new java.util.concurrent.atomic.AtomicLong(0L)
+  // set by subscribe() under the gate's read lock; final past stop()'s barrier
+  @volatile private var batcher: Thread = _
+  @volatile private var pool: ExecutorService = _
+  @volatile private var deliver: Seq[T] => Unit = _
+  // one per consumer, taken before each handoff: the batcher blocks while all are busy
+  private val permits = new Semaphore(consumerParallelism)
+  private val delivered = new AtomicLong(0L)
+  // items the batcher took off the queue: pending = taken + queued − delivered
+  private val taken = new AtomicLong(0L)
+  private val windows = new AtomicLong(0L)
+  private val progress = new java.util.ArrayDeque[WindowStream.Progress]()
 
   // ---- ingest (S1–S4) ----
   //
@@ -113,36 +121,32 @@ class WindowStream[T: Encoder](
     * delivery-side counter pairing the ingest-side queue gauges. */
   def getDeliveredCount: Long = delivered.get()
 
-  /** Latest micro-batch progress of the delivery query (SURVEY.md §2.1
-    * S7 depth: rows/batch and engine timings surfaced through the facade,
-    * not just queue gauges). None before the first trigger. */
+  /** Progress of the most recently delivered window (SURVEY.md §2.1 S7
+    * depth: rows/batch and timings surfaced through the facade, not just
+    * queue gauges). None before the first delivery. */
   def lastProgress: Option[WindowStream.Progress] =
-    Option(query).flatMap(q => Option(q.lastProgress)).map(WindowStream.progressOf)
+    progress.synchronized(Option(progress.peekLast()))
 
-  /** Ring buffer of recent micro-batch progress samples, oldest first. */
+  /** Ring buffer of the last 100 delivered windows, oldest delivery first. */
   def recentProgress: Seq[WindowStream.Progress] =
-    Option(query).map(_.recentProgress.toSeq.map(WindowStream.progressOf))
-      .getOrElse(Seq.empty)
+    progress.synchronized(progress.asScala.toSeq)
 
   // ---- consumption (S5–S6) ----
 
   /** Subscribe with errors escalated to stderr (the no-error-consumer
     * overload; unlike the reference, failures are at least visible). */
-  def subscribe(consumer: Seq[T] => Unit): StreamingQuery =
+  def subscribe(consumer: Seq[T] => Unit): Unit =
     subscribe(consumer, (batch, e) =>
       System.err.println(s"[WindowStream] batch of ${batch.size} failed: $e"))
 
   /** Subscribe with an error channel; at most one subscriber per stream.
     *
-    * The whole setup (running check → unicast CAS → pool + query + pump
-    * start) holds the read side of `gate`, the lock stop() write-acquires
-    * after flipping `running` — so subscribe-vs-stop is atomic: either
-    * this call completes first and stop() sees the live query and drains
-    * it, or stop() wins and the running check here throws. Without the
-    * gate, a subscribe() racing stop() could pass the check, then start a
-    * delivery query (and consumer pool) AFTER stop() observed `query ==
-    * null` and returned — a live query on a stopped stream. */
-  def subscribe(consumer: Seq[T] => Unit, errorConsumer: (Seq[T], Throwable) => Unit): StreamingQuery =
+    * The whole setup (running check → unicast CAS → pool + batcher start)
+    * holds the read side of `gate`, which stop() write-acquires after
+    * flipping `running` — so either this call completes first and stop()
+    * drains through the live batcher, or stop() wins and the running check
+    * here throws; never delivery threads started on a stopped stream. */
+  def subscribe(consumer: Seq[T] => Unit, errorConsumer: (Seq[T], Throwable) => Unit): Unit =
     subscribe(consumer, errorConsumer, maxRetries = 0)
 
   /** Subscribe with a retry budget — the facade's `Flux.retry(n)`
@@ -151,11 +155,13 @@ class WindowStream[T: Encoder](
     * throw re-runs that batch up to `maxRetries` more times (transient
     * sink hiccups — a flapping connection, a 429 — recover in place)
     * before the batch routes to `errorConsumer` exactly once. Batches
-    * that never throw are delivered exactly once regardless. */
+    * that never throw are delivered exactly once regardless. A throwing
+    * `errorConsumer` is reported on stderr and its batch still counts as
+    * delivered: the stream keeps running. */
   def subscribe(
       consumer: Seq[T] => Unit,
       errorConsumer: (Seq[T], Throwable) => Unit,
-      maxRetries: Int): StreamingQuery = {
+      maxRetries: Int): Unit = {
     require(maxRetries >= 0, s"maxRetries $maxRetries must be >= 0")
     val rl = gate.readLock()
     rl.lock()
@@ -165,82 +171,93 @@ class WindowStream[T: Encoder](
   private def subscribeLocked(
       consumer: Seq[T] => Unit,
       errorConsumer: (Seq[T], Throwable) => Unit,
-      maxRetries: Int): StreamingQuery = {
+      maxRetries: Int): Unit = {
     if (!running.get())
       throw new IllegalStateException(
         "WindowStream is stopped: subscribe() after stop() would start a " +
-          "delivery query no publisher can ever feed")
+          "delivery no publisher can ever feed")
     if (!subscribed.compareAndSet(false, true))
       throw new IllegalStateException(
         "WindowStream is unicast: already subscribed (WindowPublisher.java:68 contract)")
 
-    pool = Executors.newFixedThreadPool(consumerParallelism, new java.util.concurrent.ThreadFactory {
-      private val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      override def newThread(r: Runnable): Thread =
-        new Thread(r, s"graft-ws-consumer-${source.id}-${n.incrementAndGet()}")
-    })
-
-    query = source.toDS().writeStream
-      .queryName(s"window-stream-${source.id}")
-      .trigger(Trigger.ProcessingTime(windowDuration.toMillis))
-      .outputMode("append")
-      .foreachBatch { (ds: Dataset[T], _: Long) =>
-        val items = ds.collect().toSeq
-        if (items.nonEmpty) {
-          // count axis + empty-window suppression; parallel delivery on the
-          // consumer pool, awaited so trigger cadence backpressures the pump
-          val tasks = items.grouped(windowMaxBatchSize).map { chunk =>
-            new java.util.concurrent.Callable[Unit] {
-              override def call(): Unit = {
-                var attempt = 0
-                var done = false
-                while (!done) {
-                  try { consumer(chunk); done = true }
-                  catch {
-                    case e: Exception if attempt < maxRetries => attempt += 1
-                    case e: Exception => errorConsumer(chunk, e); done = true
-                  }
-                }
-              }
+    deliver = { batch =>
+      var attempt = 0
+      var done = false
+      while (!done) {
+        try { consumer(batch); done = true }
+        catch {
+          case _: Exception if attempt < maxRetries => attempt += 1
+          case e: Exception =>
+            try errorConsumer(batch, e)
+            catch { case e2: Exception =>
+              System.err.println(s"[WindowStream] errorConsumer failed on a batch of " +
+                s"${batch.size} (batch error: $e): $e2")
             }
-          }.toSeq
-          pool.invokeAll(tasks.asJava).asScala.foreach(_.get())
-          delivered.addAndGet(items.size.toLong)
-          ()
+            done = true
         }
       }
-      .start()
+    }
+    pool = Executors.newFixedThreadPool(consumerParallelism, new java.util.concurrent.ThreadFactory {
+      private val n = new AtomicInteger(0)
+      override def newThread(r: Runnable): Thread =
+        new Thread(r, s"graft-ws-consumer-$id-${n.incrementAndGet()}")
+    })
+    val b = new Thread(() => runBatcher(), s"window-stream-batcher-$id")
+    b.setDaemon(true)
+    b.start()
+    batcher = b
+  }
 
-    pumpThread = new Thread(() => {
-      // admission control, two bounds: (1) at most `capacity` items move
-      // per pump cycle — the maxOffsetsPerTrigger analogue; (2) at most
-      // `maxInFlight` items may sit in the MemoryStream undelivered —
-      // foreachBatch collects each micro-batch to the driver (the
-      // reference contract hands List<T> to an in-process lambda), and
-      // without this high-water mark a stalled trigger would let the pump
-      // accumulate an unbounded micro-batch. Publishers block on the
-      // bounded queue meanwhile, so the guard is backpressure, not loss.
-      val maxInFlight = capacity.toLong * 4
-      while (running.get()) {
-        if (pumpedN.get() - delivered.get() >= maxInFlight) {
-          Thread.sleep(windowDuration.toMillis / 2 + 1)
-        } else {
-          val drained = new java.util.ArrayList[T](capacity)
-          val first = queue.poll(windowDuration.toMillis / 2 + 1, TimeUnit.MILLISECONDS)
-          if (first != null) {
-            drained.add(first)
-            queue.drainTo(drained, capacity - 1)
-            val buf = new ArrayBuffer[T](drained.size)
-            drained.forEach(e => buf += e)
-            source.addData(buf.toSeq)
-            pumpedN.addAndGet(drained.size.toLong)
-          }
+  /** The `bufferTimeout` loop: wait for a first item, which opens a
+    * window; fill it until it holds `windowMaxBatchSize` items or
+    * `windowDuration` has passed; hand it off. Once stop() has closed
+    * ingest, windows close as soon as the queue is empty, and the thread
+    * exits when it finds the queue empty. */
+  private def runBatcher(): Unit = {
+    var stopped = false
+    while (!stopped) {
+      val first = queue.poll(WindowStream.IdlePollMs, TimeUnit.MILLISECONDS)
+      if (first == null) stopped = !running.get()
+      else {
+        val openedNs = System.nanoTime()
+        val window = ArrayBuffer(first)
+        var open = true
+        while (open && window.size < windowMaxBatchSize) {
+          val left = openedNs + windowDuration.toNanos - System.nanoTime()
+          val next =
+            if (!running.get()) queue.poll()
+            else if (left > 0) queue.poll(left, TimeUnit.NANOSECONDS)
+            else null.asInstanceOf[T]
+          if (next == null) open = false else window += next
         }
+        taken.addAndGet(window.size.toLong)
+        handOff(window.toSeq, openedNs)
       }
-    }, s"window-stream-pump-${source.id}")
-    pumpThread.setDaemon(true)
-    pumpThread.start()
-    query
+    }
+  }
+
+  /** Hand one closed window to the consumer pool, blocking while every
+    * consumer is busy; the consumer records the window's progress. */
+  private def handOff(batch: Seq[T], openedNs: Long): Unit = {
+    val closedNs = System.nanoTime()
+    val batchId = windows.getAndIncrement()
+    permits.acquire()
+    pool.execute { () =>
+      try {
+        val t0 = System.nanoTime()
+        deliver(batch)
+        val t1 = System.nanoTime()
+        val p = WindowStream.Progress(batchId, batch.size.toLong,
+          inputRowsPerSecond = batch.size * 1e9 / math.max(closedNs - openedNs, 1L),
+          processedRowsPerSecond = batch.size * 1e9 / math.max(t1 - t0, 1L),
+          batchDurationMs = (t1 - openedNs) / 1000000L, stateRowsTotal = 0L)
+        progress.synchronized {
+          if (progress.size == WindowStream.ProgressRing) progress.removeFirst()
+          progress.addLast(p)
+        }
+        delivered.addAndGet(batch.size.toLong)
+      } finally permits.release()
+    }
   }
 
   // ---- rate-controlled ingest (the reference's claimed Flux vocabulary:
@@ -266,8 +283,8 @@ class WindowStream[T: Encoder](
 
   /** `Flux.timeout(d)` analogue, surfaced as a WATCHDOG rather than a
     * stream error: fires `onStall(d)` whenever items are pending (queued
-    * or pumped but undelivered) and delivery has made no progress for
-    * `d` — a stuck consumer, a wedged trigger. Re-arms after each fire,
+    * or taken by the batcher but undelivered) and delivery has made no
+    * progress for `d` — a stuck consumer. Re-arms after each fire,
     * so a persistent stall reports once per period, and stays silent on
     * a merely idle stream (no pending items = nothing is late). The
     * returned daemon thread exits with [[stop]]. Reactor errors the
@@ -283,7 +300,7 @@ class WindowStream[T: Encoder](
         while (running.get()) {
           Thread.sleep(math.max(d.toMillis / 4, 1L))
           val c = delivered.get()
-          val pending = pumpedN.get() + queue.size() > c
+          val pending = taken.get() + queue.size() > c
           val now = System.nanoTime()
           if (c != lastCount || !pending) { lastCount = c; lastChangeNs = now }
           else if (now - lastChangeNs >= d.toNanos) {
@@ -292,7 +309,7 @@ class WindowStream[T: Encoder](
           }
         }
       } catch { case _: InterruptedException => () }
-    }, s"graft-ws-timeout-${source.id}")
+    }, s"graft-ws-timeout-$id")
     t.setDaemon(true)
     t.start()
     t
@@ -312,37 +329,28 @@ class WindowStream[T: Encoder](
   def stopOnJvmShutdown(): Thread = {
     val hook = new Thread(
       () => try stop() catch { case _: InterruptedException => () },
-      s"window-stream-shutdown-${source.id}")
+      s"window-stream-shutdown-$id")
     Runtime.getRuntime.addShutdownHook(hook)
     hook
   }
 
-  /** Drain what's already queued, then stop the query. Ordering carries
-    * the lossless contract: the pump thread may hold drained items
-    * between `queue.drainTo` and `source.addData`, so a queue-empty wait
-    * alone can declare victory while up to `capacity` items are in the
-    * pump's hands. Halt and JOIN the pump first — after the join, every
-    * item is either in the queue or already in the MemoryStream — then
-    * move the queue remainder on the caller thread, and only then run the
-    * final batches and stop.
+  /** Close ingest, deliver every accepted item, then stop the threads.
+    * After the barrier no publisher is mid-insert; the batcher drains the
+    * queue, closes its last window and exits. The items the barrier itself
+    * drained go out as windows on this thread; then the pool shuts down and
+    * in-flight consumers are awaited, so every accepted item has been
+    * delivered when stop() returns. Idempotent.
     *
-    * UNSUBSCRIBED stop(): the lossless delivery contract is conditional
-    * on a subscriber existing — the stream is unicast
-    * (WindowPublisher.java:68) and there is nobody to hand batches to.
-    * stop() on a never-subscribed stream DISCARDS any accepted items and
-    * says so on stderr with the count (never silently): publishers that
-    * outlive their consumer's existence are a caller bug, and blocking
-    * stop() forever waiting for a subscriber that will never come would
-    * turn teardown into a hang. */
-  def stop(): Unit = {
+    * UNSUBSCRIBED stop(): the unicast stream (WindowPublisher.java:68) has
+    * nobody to hand batches to, so it DISCARDS any accepted items and says
+    * so on stderr with the count (never silently); waiting for a
+    * subscriber that will never come would turn teardown into a hang. */
+  def stop(): Unit = synchronized {
     running.set(false) // new publishers now throw / get false
-    // Items drained during the barrier are BUFFERED, not routed: the
-    // barrier loop can run while a subscribe() still holds the read lock
-    // with `query` not yet assigned (query.start() takes far longer than
-    // one tryLock window), and deciding orphaned-vs-deliverable at drain
-    // time would silently discard items whose subscriber is mid-attach.
-    // Routing happens once, after the barrier + pump join, against the
-    // FINAL query state.
+    // Items drained during the barrier are BUFFERED, not routed: a
+    // subscribe() may still hold the read lock with `batcher` unassigned,
+    // so routing happens once, after the barrier, against the FINAL
+    // subscription state.
     val pending = new ArrayBuffer[T]()
     def drainRemainder(): Unit = {
       val rest = new java.util.ArrayList[T]()
@@ -357,29 +365,19 @@ class WindowStream[T: Encoder](
     val wl = gate.writeLock()
     while (!wl.tryLock(10, TimeUnit.MILLISECONDS)) drainRemainder()
     wl.unlock() // gate closed + no in-flight inserts; new calls fail on `running`
-    // join the pump only AFTER the barrier: subscribe() starts the pump
-    // under the read lock, so a concurrent subscribe could set pumpThread
-    // after an earlier join-first check saw null — past the barrier the
-    // reference is final, and the joined pump has flushed its in-hand
-    // items to the MemoryStream (they'd otherwise dodge drainRemainder)
-    if (pumpThread != null) pumpThread.join()
-    // the query may already be terminated with an error (e.g. a failing
-    // errorConsumer) — processAllAvailable() then rethrows; cleanup must
-    // still run or every failed stream leaks consumerParallelism
-    // non-daemon threads for the JVM's lifetime
     try {
-      drainRemainder() // pump joined: whatever remains is queue-resident
-      if (query != null) {
-        if (pending.nonEmpty) source.addData(pending.toSeq)
-        query.processAllAvailable()
-        query.stop()
-      } else if (pending.nonEmpty) {
-        System.err.println(
-          s"[WindowStream] stop() before subscribe(): discarding ${pending.size} " +
-            "accepted item(s) — the unicast stream has no consumer to deliver to")
-      }
+      drainRemainder() // past the barrier nothing is inserted any more
+      if (batcher != null) {
+        batcher.join() // it closed and handed off its last window
+        pending.grouped(windowMaxBatchSize).foreach(w => handOff(w.toSeq, System.nanoTime()))
+      } else if (pending.nonEmpty) System.err.println(
+        s"[WindowStream] stop() before subscribe(): discarding ${pending.size} " +
+          "accepted item(s) — the unicast stream has no consumer to deliver to")
     } finally {
-      if (pool != null) pool.shutdown()
+      if (pool != null) {
+        pool.shutdown()
+        pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      }
     }
   }
 }
@@ -388,9 +386,16 @@ object WindowStream {
   /** The reference's DEFAULT_QUEUE_SIZE = 1 << 4 (WindowPublisher.java:22). */
   val DefaultQueueSize: Int = 16
 
-  /** One micro-batch progress sample of the delivery query — the facade's
-    * stable projection of `StreamingQueryProgress` (rows per batch, batch
-    * timing, total stateful-operator rows; 0 for this stateless sink). */
+  /** Windows kept by `recentProgress`. */
+  private val ProgressRing = 100
+
+  /** How often the idle batcher rechecks whether the stream has stopped. */
+  private val IdlePollMs = 10L
+
+  /** One delivered window: its size, rows per second while it was open
+    * and per second of consumer time (retries included), and the time
+    * from its opening to the end of its delivery. `stateRowsTotal` is
+    * always 0: the facade keeps no keyed state. */
   case class Progress(
       batchId: Long,
       numInputRows: Long,
@@ -398,16 +403,6 @@ object WindowStream {
       processedRowsPerSecond: Double,
       batchDurationMs: Long,
       stateRowsTotal: Long)
-
-  private[streaming] def progressOf(
-      p: org.apache.spark.sql.streaming.StreamingQueryProgress): Progress =
-    Progress(
-      batchId = p.batchId,
-      numInputRows = p.numInputRows,
-      inputRowsPerSecond = p.inputRowsPerSecond,
-      processedRowsPerSecond = p.processedRowsPerSecond,
-      batchDurationMs = p.batchDuration,
-      stateRowsTotal = p.stateOperators.map(_.numRowsTotal).sum)
 
   /** Drop-eligible admission gate in front of a [[WindowStream]] —
     * `Flux.sample` (trailing) / `throttleLatest` (leading) semantics with

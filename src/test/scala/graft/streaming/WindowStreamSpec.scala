@@ -13,6 +13,9 @@ import graft.SparkSpecBase
   * zero loss and zero duplication under contention. */
 class WindowStreamSpec extends SparkSpecBase {
 
+  private def threadsNamed(prefix: String): Int =
+    Thread.getAllStackTraces.keySet.asScala.count(_.getName.startsWith(prefix))
+
   test("lossless multi-producer soak: no loss, no dup, batch bounds hold") {
     val s = spark
     import s.implicits._
@@ -52,8 +55,8 @@ class WindowStreamSpec extends SparkSpecBase {
     val s = spark
     import s.implicits._
     // small capacity + long window: stop() very likely lands while the
-    // pump holds a drained slice it has not yet addData'd — the exact
-    // window of the stop() race (drain-join-then-flush must cover it)
+    // batcher holds an open window and the queue is full — the batcher
+    // must close that window and drain the queue before stop() returns
     for (round <- 1 to 5) {
       val ws = new WindowStream[Int](s, queueCapacity = 16,
         windowMaxBatchSize = 15, windowDuration = 300.millis, consumerParallelism = 2)
@@ -63,7 +66,7 @@ class WindowStreamSpec extends SparkSpecBase {
       val t = new Thread(() => (0 until n).foreach(ws.publish))
       t.start()
       t.join(30000)
-      ws.stop() // no settle wait: everything queued or in the pump's hands
+      ws.stop() // no settle wait: everything queued or in the batcher's hands
       assert(received.asScala.size === n, s"round $round: loss across stop()")
       assert(received.asScala.toSet.size === n, s"round $round: duplicates")
     }
@@ -119,12 +122,12 @@ class WindowStreamSpec extends SparkSpecBase {
   }
 
   test("stop() racing an in-flight subscribe() loses nothing") {
-    // The hazardous window: subscribe() holds the gate read lock through
-    // query.start() (well over one 10 ms tryLock slice) with `query`
-    // still null, while stop()'s barrier loop drains the queue. Items
-    // accepted BEFORE stop() whose subscriber successfully attaches must
-    // still be delivered — the drain may not discard them just because
-    // it ran before the query reference was assigned.
+    // The hazardous window: subscribe() holds the gate read lock while it
+    // starts the pool and the batcher, with `batcher` still null, while
+    // stop()'s barrier loop drains the queue. Items accepted BEFORE stop()
+    // whose subscriber successfully attaches must still be delivered — the
+    // drain may not discard them just because it ran before the batcher
+    // reference was assigned.
     val s = spark
     import s.implicits._
     val ws = new WindowStream[Int](s, queueCapacity = 64,
@@ -135,22 +138,22 @@ class WindowStreamSpec extends SparkSpecBase {
       try ws.subscribe(batch => batch.foreach(received.add))
       catch { case _: IllegalStateException => () }) // stop() won the race
     subscriber.start()
-    Thread.sleep(5) // land stop() inside subscribe's query.start() window
+    Thread.sleep(5) // land stop() near subscribe's setup
     ws.stop()
     subscriber.join()
     // invariant: the subscriber either never attached (stop reported the
     // discard) or attached and then EVERY pre-stop item arrived
     if (!received.isEmpty)
       assert(received.asScala.toSet === (1 to 20).toSet,
-        "items drained mid-subscribe must be routed to the attached query")
+        "items drained mid-subscribe must be routed to the attached subscriber")
   }
 
   test("stop() shuts the consumer pool down (no thread leak per stream)") {
     val s = spark
     import s.implicits._
-    def consumerThreads() = Thread.getAllStackTraces.keySet.asScala
-      .count(_.getName.startsWith("graft-ws-consumer-"))
+    def consumerThreads() = threadsNamed("graft-ws-consumer-")
     val before = consumerThreads()
+    val batchersBefore = threadsNamed("window-stream-batcher-")
     val streams = (1 to 3).map { _ =>
       val ws = new WindowStream[Int](s, windowDuration = 100.millis, consumerParallelism = 4)
       ws.subscribe(_ => ())
@@ -164,6 +167,8 @@ class WindowStreamSpec extends SparkSpecBase {
       Thread.sleep(100)
     assert(consumerThreads() <= before,
       "stopped streams must not leave consumer-pool threads behind")
+    assert(threadsNamed("window-stream-batcher-") <= batchersBefore,
+      "stop() joins the batcher: no batcher thread survives it")
   }
 
   test("error channel: a poisoned batch routes to errorConsumer, the stream continues") {
@@ -245,10 +250,10 @@ class WindowStreamSpec extends SparkSpecBase {
     val s = spark
     import s.implicits._
     val ws = new WindowStream[Int](s, windowDuration = 200.millis)
-    val q = ws.subscribe(_ => ())
+    ws.subscribe(_ => ())
     try {
       intercept[IllegalStateException] { ws.subscribe(_ => ()) }
-    } finally { q.stop(); ws.stop() }
+    } finally ws.stop()
   }
 
   test("S7 depth: delivery progress (rows/batch, timings) surfaces through the facade") {
@@ -260,17 +265,16 @@ class WindowStreamSpec extends SparkSpecBase {
     val n = 120
     ws.publish(1 to n)
     val deadline = System.currentTimeMillis() + 30000
-    // progress is posted by the engine AFTER foreachBatch returns, so wait
-    // for the per-batch accounting to catch up with the delivered counter
+    // wait for the per-window accounting to catch up with the publishes
     while ((ws.getDeliveredCount < n ||
         ws.recentProgress.map(_.numInputRows).sum < n) &&
         System.currentTimeMillis() < deadline)
       Thread.sleep(100)
     assert(ws.getDeliveredCount === n.toLong, "delivered counter tracks every item")
-    assert(ws.lastProgress.isDefined, "progress visible after the first trigger")
+    assert(ws.lastProgress.isDefined, "progress visible after the first delivery")
     val progress = ws.recentProgress
     assert(progress.map(_.numInputRows).sum === n.toLong,
-      "micro-batch input rows across recent progress account for all items")
+      "window rows across recent progress account for all items")
     assert(progress.map(_.batchId).distinct.size === progress.size, "one sample per batch")
     assert(progress.forall(_.batchDurationMs >= 0))
     assert(progress.forall(_.stateRowsTotal === 0L), "delivery sink is stateless")
@@ -335,5 +339,185 @@ class WindowStreamSpec extends SparkSpecBase {
     assert(got === Seq(1, 3), "leading emit + close-flushed latest; 2 conflated away")
     assert(gate.publishedCount === 2L && gate.droppedCount === 1L)
     intercept[IllegalStateException](gate.offer(4))
+  }
+
+  test("reference contract: 10 throttled producers x 5,000 items delivered exactly once within 10 s") {
+    // WindowPublisherTest.java:22-46 at its own settings: queue 16, batch
+    // 15, 1 ms window, consumers = cores, a 1 ms sleep per published item,
+    // 50,000 items received exactly once within 10 s (>= 5,000 msg/s)
+    val s = spark
+    import s.implicits._
+    val nThreads = 10
+    val perThread = 5000
+    val total = nThreads * perThread
+    val maxBatch = 15
+    val budgetNs = 10L * 1000 * 1000 * 1000
+    val ws = new WindowStream[Int](s, queueCapacity = 16, windowMaxBatchSize = maxBatch,
+      windowDuration = 1.millis, consumerParallelism = Runtime.getRuntime.availableProcessors())
+    val seen = new java.util.concurrent.atomic.AtomicIntegerArray(total)
+    val received = new java.util.concurrent.atomic.AtomicInteger(0)
+    val badBatches = new AtomicInteger(0)
+    ws.subscribe { batch =>
+      if (batch.isEmpty || batch.size > maxBatch) badBatches.incrementAndGet()
+      batch.foreach(seen.incrementAndGet)
+      received.addAndGet(batch.size)
+    }
+    @volatile var abort = false
+    val threads = (0 until nThreads).map { t =>
+      new Thread(() => {
+        var i = 0
+        while (i < perThread && !abort) {
+          ws.publish(t * perThread + i)
+          Thread.sleep(1)
+          i += 1
+        }
+      })
+    }
+    val start = System.nanoTime()
+    threads.foreach(_.start())
+    while (received.get() < total && System.nanoTime() - start < budgetNs) Thread.sleep(5)
+    val elapsedMs = (System.nanoTime() - start) / 1000000
+    val got = received.get()
+    abort = true // a too-slow stream fails fast instead of running on
+    threads.foreach(_.join())
+    ws.stop()
+    assert(got === total, s"only $got of $total items delivered within 10 s")
+    assert(elapsedMs <= 10000L, s"took $elapsedMs ms")
+    assert((0 until total).forall(seen.get(_) == 1), "every item delivered exactly once")
+    assert(badBatches.get() === 0, s"every batch holds 1..$maxBatch items")
+  }
+
+  test("bufferTimeout: a full window closes on the count axis, long before its time axis") {
+    val s = spark
+    import s.implicits._
+    val ws = new WindowStream[Int](s, queueCapacity = 16, windowMaxBatchSize = 15,
+      windowDuration = 10.seconds, consumerParallelism = 2)
+    val batches = new java.util.concurrent.LinkedBlockingQueue[Seq[Int]]()
+    ws.subscribe(b => batches.put(b))
+    // twice: the second round starts on a settled stream, mid-window of
+    // any timer the delivery path might run
+    for (round <- 0 until 2) {
+      val items = (1 to 15).map(_ + 15 * round)
+      ws.publish(items)
+      val batch = batches.poll(1, java.util.concurrent.TimeUnit.SECONDS)
+      assert(batch === items, s"round $round: 15 items on a 10 s window arrive as one batch within 1 s")
+    }
+    ws.stop()
+    assert(batches.isEmpty, "no further (empty) window is delivered")
+  }
+
+  test("bufferTimeout: a lone item waits out its window, then is delivered") {
+    val s = spark
+    import s.implicits._
+    val ws = new WindowStream[Int](s, queueCapacity = 16, windowMaxBatchSize = 15,
+      windowDuration = 200.millis, consumerParallelism = 1)
+    val at = new java.util.concurrent.LinkedBlockingQueue[java.lang.Long]()
+    ws.subscribe(_ => at.put(System.nanoTime()))
+    Thread.sleep(50) // let the batcher settle into its idle wait
+    // The window opens when the batcher takes the item, which can precede
+    // publish() returning by the thread hand-over; measure the lower bound
+    // from the call and the upper bound from the return.
+    val called = System.nanoTime()
+    ws.publish(42)
+    val returned = System.nanoTime()
+    val delivered = at.poll(5, java.util.concurrent.TimeUnit.SECONDS)
+    ws.stop()
+    assert(delivered != null, "the lone item is delivered")
+    assert(delivered - called >= 200L * 1000 * 1000,
+      s"delivered ${(delivered - called) / 1e6} ms after publish: before its window closed")
+    assert(delivered - returned <= 2L * 1000 * 1000 * 1000,
+      s"delivered ${(delivered - returned) / 1e6} ms after publish returned: over 2 s")
+  }
+
+  test("bufferTimeout soak: no delivered batch is empty or larger than windowMaxBatchSize") {
+    val s = spark
+    import s.implicits._
+    val maxBatch = 7
+    val producers = 4
+    val perProducer = 5000
+    val total = producers * perProducer
+    val ws = new WindowStream[Int](s, queueCapacity = 16, windowMaxBatchSize = maxBatch,
+      windowDuration = 2.millis, consumerParallelism = 3)
+    val seen = new java.util.concurrent.atomic.AtomicIntegerArray(total)
+    val sizes = new ConcurrentLinkedQueue[Int]()
+    ws.subscribe { batch =>
+      sizes.add(batch.size)
+      batch.foreach(seen.incrementAndGet)
+    }
+    val threads = (0 until producers).map { p =>
+      new Thread(() => (0 until perProducer).foreach { i =>
+        ws.publish(p * perProducer + i)
+        if (i % 500 == 499) Thread.sleep(5) // bursts and gaps: both axes close windows
+      })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join(60000))
+    ws.stop()
+    val bySize = sizes.asScala.groupBy(identity).map { case (n, c) => n -> c.size }
+    assert(bySize.keys.forall(n => n >= 1 && n <= maxBatch), s"batch sizes $bySize")
+    assert(sizes.asScala.sum === total)
+    assert((0 until total).forall(seen.get(_) == 1), "every item delivered exactly once")
+  }
+
+  test("a throwing errorConsumer does not wedge the stream") {
+    val s = spark
+    import s.implicits._
+    val ws = new WindowStream[Int](s, queueCapacity = 16,
+      windowMaxBatchSize = 5, windowDuration = 5.millis, consumerParallelism = 2)
+    val good = new ConcurrentLinkedQueue[Int]()
+    val poisoned = new ConcurrentLinkedQueue[Int]()
+    val errorCalls = new AtomicInteger(0)
+    ws.subscribe(
+      batch => {
+        if (batch.contains(13)) throw new RuntimeException("poison")
+        batch.foreach(good.add)
+      },
+      (batch, _) => {
+        errorCalls.incrementAndGet()
+        batch.foreach(poisoned.add)
+        throw new IllegalStateException("the error channel itself fails")
+      })
+    val n = 300 // far past the queue's 16 slots: publishers block if delivery stops
+    val producer = new Thread(() => ws.publish(1 to n))
+    producer.start()
+    producer.join(30000)
+    assert(!producer.isAlive, "publish must not block forever after the errorConsumer threw")
+    val deadline = System.currentTimeMillis() + 30000
+    while (ws.getDeliveredCount < n && System.currentTimeMillis() < deadline) Thread.sleep(10)
+    ws.stop() // returns normally
+    assert(errorCalls.get() === 1, "the poisoned batch reaches the error channel once")
+    assert(ws.getDeliveredCount === n.toLong, "the failed batch counts as delivered")
+    assert(good.asScala.toSet === ((1 to n).toSet -- poisoned.asScala.toSet),
+      "every item after the failure still arrives")
+    assert(good.asScala.toSet.contains(n))
+  }
+
+  test("no batcher thread survives stop() before subscribe or stop() racing subscribe") {
+    val s = spark
+    import s.implicits._
+    val before = threadsNamed("window-stream-batcher-")
+    val early = new WindowStream[Int](s, queueCapacity = 16, consumerParallelism = 2)
+    early.publish(1 to 5)
+    early.stop()
+    intercept[IllegalStateException](early.subscribe(_ => ()))
+    assert(threadsNamed("window-stream-batcher-") <= before, "stop() before subscribe starts no batcher")
+    for (round <- 1 to 20) {
+      val ws = new WindowStream[Int](s, queueCapacity = 64,
+        windowDuration = 20.millis, consumerParallelism = 2)
+      ws.publish(1 to 20)
+      val received = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val attached = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val subscriber = new Thread(() =>
+        try { ws.subscribe(batch => batch.foreach(received.add)); attached.set(true) }
+        catch { case _: IllegalStateException => () })
+      subscriber.start()
+      if (round % 2 == 0) Thread.sleep(1)
+      ws.stop()
+      subscriber.join()
+      if (attached.get())
+        assert(received.asScala.toSet === (1 to 20).toSet, s"round $round: loss across stop()")
+      assert(threadsNamed("window-stream-batcher-") <= before,
+        s"round $round: a batcher thread survived stop()")
+    }
   }
 }
