@@ -661,17 +661,25 @@ object Dedup {
     * The candIds semi-join keeps the corpus streamed ONCE (candIds
     * broadcast into the scan); the repartition below both renames gives
     * the two verify joins one canonicalized exchange (computed once,
-    * ReusedExchange on the other side). `keep` columns ride through.
-    * Emits `shared` (long) and exact `jaccard`, filtered to minJaccard.
+    * ReusedExchange on the other side). Emits (ia, ib, ta, tb, shared,
+    * na, nb, jaccard) filtered to minJaccard: the candidate texts
+    * `ta`/`tb` stay available for further per-pair kernels
+    * ([[sigAgreement]]) and prune away when a caller drops them.
     * Bit-equality of the kernel against the declarative
     * shinglesFromTokens + array_intersect form is unit-tested (DedupSpec). */
   private def verifyCandidatesExact(
       df: DataFrame, idCol: String, textCol: String, n: Int,
-      cand: DataFrame, minJaccard: Double, keep: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.graftglue.ColumnGlue
+      cand: DataFrame, minJaccard: Double): DataFrame = {
     // cand is referenced three times (both candIds branches + the verify
     // join): affordable because every caller's candidate pipeline is a
-    // cheap BAND join (LSH-limited). Do NOT route a corpus-wide candidate
+    // cheap BAND join (LSH-limited) — and only when every reference
+    // prunes to the SAME columns. Then the three copies are one plan and
+    // AQE reuses its stages; a column carried by `cand` that the candIds
+    // branches prune away (a signature, an estimate) makes three
+    // different plans, and the band join, its dedup aggregate and the
+    // signature scans all re-run per reference (measured on q122: 56
+    // Spark jobs instead of 10). Compute per-pair values from `ta`/`tb`
+    // after the verify instead. Do NOT route a corpus-wide candidate
     // generator through here unpersisted — and never per-pair-verify an
     // unbanded candidate stream at all (see jaccardPairs, which counts
     // shared hashes by aggregation instead: 10-50× faster at sf0.1).
@@ -680,17 +688,37 @@ object Dedup {
     val txt = df.select(col(idCol).as("id"), col(textCol).as("text_"))
       .join(candIds, "id")
       .repartition(df.sparkSession.sparkContext.defaultParallelism, col("id"))
+    scoreShingleOverlap(cand
+      .join(txt.select(col("id").as("ia"), col("text_").as("ta")), "ia")
+      .join(txt.select(col("id").as("ib"), col("text_").as("tb")), "ib"),
+      n, Seq("ia", "ib", "ta", "tb"), minJaccard)
+  }
+
+  /** Signature-agreement Jaccard estimate of a verified pair's texts
+    * `ta`/`tb`: matching MinHash positions / numHashes, an exact multiple
+    * of 1/numHashes. The signature kernel runs per pair, like the verify. */
+  private def sigAgreement(n: Int, numHashes: Int, portable: Boolean): Column = {
+    import org.apache.spark.sql.graftglue.ColumnGlue
+    def sig(t: String) = ColumnGlue.column(graft.expressions.MinHashSigKernel(
+      ColumnGlue.expression(col(t)), n, numHashes, portable))
+    size(filter(zip_with(sig("ta"), sig("tb"), (x, y) => x === y), m => m)) * lit(1.0) / numHashes
+  }
+
+  /** (keep, shared, na, nb, jaccard) of each pair of texts `ta`/`tb`,
+    * filtered to minJaccard, from the fused [shared,|A|,|B|]
+    * [[graft.expressions.JaccardShinglesKernel]]. The kernel runs inside a
+    * generator: predicate pushdown never moves a filter on generator
+    * output below its Generate, so the jaccard filter is not inlined into
+    * the join condition below, where it would call the kernel four more
+    * times per pair. The kernel runs once per pair (pinned by a DedupSpec
+    * plan test). */
+  private def scoreShingleOverlap(
+      pairs: DataFrame, n: Int, keep: Seq[String], minJaccard: Double): DataFrame = {
+    import org.apache.spark.sql.graftglue.ColumnGlue
     val jc = ColumnGlue.column(graft.expressions.JaccardShinglesKernel(
       ColumnGlue.expression(col("ta")), ColumnGlue.expression(col("tb")), n))
-    val keepCols = Seq("ia", "ib") ++ keep
-    cand
-      .join(txt.select(col("id").as("ia"), col("text_").as("ta")), "ia")
-      .join(txt.select(col("id").as("ib"), col("text_").as("tb")), "ib")
-      // jc_ is referenced 3× by the next projection, so the kernel stays a
-      // materialized attribute (CollapseProject's multi-reference guard) —
-      // one evaluation per pair
-      .select(keepCols.map(col) :+ jc.as("jc_"): _*)
-      .select(keepCols.map(col) ++ Seq(
+    pairs.select(keep.map(col) :+ explode(array(jc)).as("jc_"): _*)
+      .select(keep.map(col) ++ Seq(
         element_at(col("jc_"), 1).as("shared"),
         element_at(col("jc_"), 2).as("na"),
         element_at(col("jc_"), 3).as("nb")): _*)
@@ -702,7 +730,7 @@ object Dedup {
   /** Banded-bucket candidate pairs for [[minHashLshPairs]] — exposed at
     * package level so the geometry property tests can measure CANDIDATE
     * volume (the scale-governing quantity) directly, not just the
-    * verified survivors. Output: (ia, ib, siga, sigb), deduplicated. */
+    * verified survivors. Output: (ia, ib), deduplicated. */
   private[operators] def minHashCandidates(
       df: DataFrame,
       idCol: String,
@@ -713,11 +741,10 @@ object Dedup {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
     val sigs = minHashSigsNative(df, idCol, textCol, n, numHashes, portable = false)
-    // Band join carries (id, sig, band, bkey) — sig is numHashes longs, a
-    // constant few hundred bytes; the variable-width shingle arrays never
-    // ride the shuffle, they rejoin by id only for surviving candidates.
+    // Band join carries (id, band, bkey) only; the verify rejoins texts
+    // by id for the candidates.
     val banded = sigs.select(
-      col("id"), col("sig"),
+      col("id"),
       posexplode(expr(
         s"transform(sequence(0, ${bands - 1}), j -> xxhash64(slice(sig, j * $r + 1, $r), j))"))
         .as(Seq("band", "bkey")))
@@ -725,13 +752,12 @@ object Dedup {
     // both renamed sides + shuffled join (both sides are corpus-sized)
     val bandedS = banded.repartition(
       banded.sparkSession.sparkContext.defaultParallelism, col("band"), col("bkey"))
-    val a = bandedS.select(col("id").as("ia"), col("sig").as("siga"), col("band"), col("bkey"))
-    val b = bandedS.select(col("id").as("ib"), col("sig").as("sigb"),
-      col("band").as("band2"), col("bkey").as("bkey2"))
+    val a = bandedS.select(col("id").as("ia"), col("band"), col("bkey"))
+    val b = bandedS.select(col("id").as("ib"), col("band").as("band2"), col("bkey").as("bkey2"))
     a.hint("shuffle_hash")
       .join(b,
         col("band") === col("band2") && col("bkey") === col("bkey2") && col("ia") < col("ib"))
-      .select("ia", "ib", "siga", "sigb")
+      .select("ia", "ib")
       .dropDuplicates("ia", "ib")
   }
 
@@ -769,10 +795,9 @@ object Dedup {
           "with the corpus; prefer rowsPerBand >= 4 (e.g. numHashes=32, bands=8) " +
           "unless this recall choice is deliberate")
     }
-    val cand = minHashCandidates(df, idCol, textCol, n, numHashes, bands)
-    verifyCandidatesExact(df, idCol, textCol, n, cand, minJaccard, Seq("siga", "sigb"))
-      .withColumn("est_jaccard",
-        expr(s"size(filter(zip_with(siga, sigb, (x, y) -> x = y), b -> b)) / cast($numHashes as double)"))
+    verifyCandidatesExact(df, idCol, textCol, n,
+        minHashCandidates(df, idCol, textCol, n, numHashes, bands), minJaccard)
+      .withColumn("est_jaccard", sigAgreement(n, numHashes, portable = false))
       .select("ia", "ib", "shared", "jaccard", "est_jaccard")
   }
 
@@ -791,15 +816,6 @@ object Dedup {
         (c, b) -> IF(c >= 0, shiftleft(1L, cast(b as int)), 0L)),
       0L, (h, x) -> h | x)""")
 
-  /** MinHash+LSH with an engine-portable hash family, so the WHOLE
-    * pipeline (signatures → bands → candidates → exact-Jaccard verify) is
-    * replayable in ANSI-ish SQL and hash-gated by the DuckDB oracle (q47)
-    * — the cross-engine-verifiable counterpart of [[minHashLshPairs]]
-    * (whose xxhash64 family is faster but Spark-only).
-    *
-    * Hash family: shingle hash h = polynomial char hash mod P (P=1e9+7);
-    * permutation i = (Aᵢ·h + Bᵢ) mod P with Aᵢ = 2i+3, Bᵢ = 1000i+7;
-    * band key = base-131 fold of the band's signature slice mod P. */
   /** Per-band LSH key columns over the materialized `sig` array: base-131
     * fold of the band's signature slice mod P — shared by every portable
     * banding path so self-join and cross-corpus candidacy are identical. */
@@ -863,7 +879,6 @@ object Dedup {
       bands: Int = 2,
       minJaccard: Double = 0.8,
       corpusBands: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.graftglue.ColumnGlue
     val par = corpus.sparkSession.sparkContext.defaultParallelism
     val bIn = minHashBandsPortable(incoming, idCol, textCol, n, numHashes, bands)
       .select(col("id").as("in_id"), col("band"), col("bkey"))
@@ -877,25 +892,14 @@ object Dedup {
         col("band") === col("band2") && col("bkey") === col("bkey2"))
       .select("in_id", "corpus_id").dropDuplicates("in_id", "corpus_id")
     // exact verify on candidate texts only, one fused pairwise kernel pass
-    val txtIn = incoming.select(col(idCol).as("in_id"), col(textCol).as("ta_"))
+    val txtIn = incoming.select(col(idCol).as("in_id"), col(textCol).as("ta"))
       .join(cand.select("in_id").distinct(), "in_id")
       .repartition(par, col("in_id"))
-    val txtC = corpus.select(col(idCol).as("corpus_id"), col(textCol).as("tb_"))
+    val txtC = corpus.select(col(idCol).as("corpus_id"), col(textCol).as("tb"))
       .join(cand.select("corpus_id").distinct(), "corpus_id")
       .repartition(par, col("corpus_id"))
-    val jc = ColumnGlue.column(graft.expressions.JaccardShinglesKernel(
-      ColumnGlue.expression(col("ta_")), ColumnGlue.expression(col("tb_")), n))
-    cand.join(txtIn, "in_id").join(txtC, "corpus_id")
-      // jc_ is referenced 3× below, so the kernel stays a materialized
-      // attribute — one evaluation per candidate pair
-      .select(col("in_id"), col("corpus_id"), jc.as("jc_"))
-      .select(col("in_id"), col("corpus_id"),
-        element_at(col("jc_"), 1).as("shared"),
-        element_at(col("jc_"), 2).as("na"),
-        element_at(col("jc_"), 3).as("nb"))
-      .withColumn("jaccard",
-        col("shared").cast("double") / (col("na") + col("nb") - col("shared")))
-      .filter(col("jaccard") >= minJaccard)
+    scoreShingleOverlap(cand.join(txtIn, "in_id").join(txtC, "corpus_id"),
+      n, Seq("in_id", "corpus_id"), minJaccard)
       .select("in_id", "corpus_id", "shared", "jaccard")
   }
 
@@ -930,6 +934,15 @@ object Dedup {
       Seq(idCol), "left_anti")
   }
 
+  /** MinHash+LSH with an engine-portable hash family, so the WHOLE
+    * pipeline (signatures → bands → candidates → exact-Jaccard verify) is
+    * replayable in ANSI-ish SQL and hash-gated by the DuckDB oracle (q47)
+    * — the cross-engine-verifiable counterpart of [[minHashLshPairs]]
+    * (whose xxhash64 family is faster but Spark-only).
+    *
+    * Hash family: shingle hash h = polynomial char hash mod P (P=1e9+7);
+    * permutation i = (Aᵢ·h + Bᵢ) mod P with Aᵢ = 2i+3, Bᵢ = 1000i+7;
+    * band key = base-131 fold of the band's signature slice mod P. */
   def portableMinHashPairs(
       df: DataFrame,
       idCol: String = "doc_id",
@@ -937,16 +950,23 @@ object Dedup {
       n: Int = 3,
       numHashes: Int = 8,
       bands: Int = 2,
-      minJaccard: Double = 0.8): DataFrame = {
+      minJaccard: Double = 0.8): DataFrame =
+    verifyCandidatesExact(df, idCol, textCol, n,
+      portableCandidates(df, idCol, textCol, n, numHashes, bands), minJaccard)
+      .select("ia", "ib", "shared", "jaccard")
+
+  /** (ia, ib) pairs sharing a portable LSH bucket, ia < ib, deduplicated:
+    * the band self-join over [[minHashBandsPortable]]'s rows. */
+  private def portableCandidates(
+      df: DataFrame, idCol: String, textCol: String,
+      n: Int, numHashes: Int, bands: Int): DataFrame = {
     val banded = minHashBandsPortable(df, idCol, textCol, n, numHashes, bands)
       .repartition(df.sparkSession.sparkContext.defaultParallelism, col("band"), col("bkey"))
     val a = banded.select(col("id").as("ia"), col("band"), col("bkey"))
     val b = banded.select(col("id").as("ib"), col("band").as("band2"), col("bkey").as("bkey2"))
-    val cand = a.hint("shuffle_hash")
+    a.hint("shuffle_hash")
       .join(b, col("band") === col("band2") && col("bkey") === col("bkey2") && col("ia") < col("ib"))
       .select("ia", "ib").dropDuplicates("ia", "ib")
-    verifyCandidatesExact(df, idCol, textCol, n, cand, minJaccard, Seq.empty)
-      .select("ia", "ib", "shared", "jaccard")
   }
 
   /** MinHash calibration audit — [[Similarity.rankingRecall]]'s role for
@@ -964,11 +984,12 @@ object Dedup {
     * pair — est is an exact multiple of 1/numHashes (no float hazard);
     * exact/err rounded as genuine quotients.
     *
-    * Scale shape: [[portableMinHashPairs]]'s banding + candidate join
-    * verbatim (signatures are numHashes longs on the wire); the
-    * estimate is a per-pair zip over the two signatures already carried
-    * by the candidate rows' id-joins, and the exact verify runs only on
-    * candidate texts ([[verifyCandidatesExact]]'s contract). */
+    * Scale shape: the production pair pipeline ([[portableMinHashPairs]])
+    * at j ≥ 0, so it audits exactly the production candidacy; `est` is
+    * computed per pair from the two candidate texts the verify already
+    * joins, with the same portable signature kernel that banded them. No
+    * signature frame is persisted or joined by id; only candidate texts
+    * are shuffled. */
   def minHashCalibration(
       df: DataFrame,
       idCol: String = "doc_id",
@@ -977,26 +998,10 @@ object Dedup {
       numHashes: Int = 8,
       bands: Int = 2,
       roundTo: Int = 4): DataFrame = {
-    val sig = minHashSigsNative(df, idCol, textCol, n, numHashes, portable = true)
-      .persist(StorageLevel.DISK_ONLY)
-    val banded = sig.select(col("id"),
-        posexplode(array(portableBandKeyCols(numHashes, bands): _*))
-          .as(Seq("band", "bkey")))
-      .repartition(df.sparkSession.sparkContext.defaultParallelism,
-        col("band"), col("bkey"))
-    val a = banded.select(col("id").as("ia"), col("band"), col("bkey"))
-    val b = banded.select(col("id").as("ib"), col("band").as("band2"), col("bkey").as("bkey2"))
-    val cand = a.hint("shuffle_hash")
-      .join(b, col("band") === col("band2") && col("bkey") === col("bkey2") &&
-        col("ia") < col("ib"))
-      .select("ia", "ib").dropDuplicates("ia", "ib")
-    val withEst = cand
-      .join(sig.select(col("id").as("ia"), col("sig").as("sa")), Seq("ia"))
-      .join(sig.select(col("id").as("ib"), col("sig").as("sb")), Seq("ib"))
-      .select(col("ia"), col("ib"),
-        (size(filter(zip_with(col("sa"), col("sb"), (x, y) => x === y),
-          m => m)) * lit(1.0) / numHashes).as("est"))
-    verifyCandidatesExact(df, idCol, textCol, n, withEst, 0.0, Seq("est"))
+    verifyCandidatesExact(df, idCol, textCol, n,
+        portableCandidates(df, idCol, textCol, n, numHashes, bands), 0.0)
+      .select(col("ia"), col("ib"), col("jaccard"),
+        sigAgreement(n, numHashes, portable = true).as("est"))
       .select(col("ia"), col("ib"),
         col("est").as("est_jaccard"),
         round(col("jaccard"), roundTo).as("exact_jaccard"),

@@ -1005,6 +1005,81 @@ class DedupSpec extends SparkSpecBase {
     assert(cal.nonEmpty)
   }
 
+  /** Spark jobs `body` starts, counted by a listener on jobs tagged with a
+    * local property. The bus delivers events in order, so once a second,
+    * differently tagged job has ended every earlier job start was seen. */
+  private def jobsStarted(body: => Unit): Int = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val key = "graft.spec.jobs"
+    val counted = new java.util.concurrent.atomic.AtomicInteger()
+    val barrierIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)).orNull match {
+          case "count" => counted.incrementAndGet()
+          case "barrier" => barrierIds.add(e.jobId)
+          case _ =>
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (barrierIds.contains(e.jobId)) flushed.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, "count")
+      body
+      sc.setLocalProperty(key, "barrier")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus flush")
+      counted.get
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** Entries in the session's `CacheManager`; the count is `private[sql]`
+    * in Scala but a public JVM method, so it is read reflectively. */
+  private def cacheEntries(): Int = {
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+    cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int]
+  }
+
+  test("minHashCalibration persists nothing that outlives its action") {
+    val docs = Tables.load(spark, sfDir, "documents")
+    // an identical plan cached by an earlier test would absorb a new persist
+    spark.catalog.clearCache()
+    val rdds0 = spark.sparkContext.getPersistentRDDs.keySet
+    val cache0 = cacheEntries()
+    assert(Dedup.minHashCalibration(docs).count() > 0)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- rdds0
+    assert(leaked.isEmpty, s"persisted RDDs left behind: $leaked")
+    assert(cacheEntries() === cache0, "CacheManager entries left behind")
+  }
+
+  test("minHashCalibration starts no more Spark jobs than the portable pair pipeline at j>=0") {
+    val docs = Tables.load(spark, sfDir, "documents")
+    val cal = jobsStarted(Dedup.minHashCalibration(docs).write.format("noop").mode("overwrite").save())
+    val pairs = jobsStarted(
+      Dedup.portableMinHashPairs(docs, minJaccard = 0.0).write.format("noop").mode("overwrite").save())
+    assert(pairs > 0)
+    assert(cal <= pairs, s"calibration ran $cal jobs, the pair pipeline $pairs")
+  }
+
+  test("the LSH verify plans evaluate jaccard_shingles once per candidate pair") {
+    def kernels(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.map(_.expressions.map(_.collect {
+        case k: graft.expressions.JaccardShinglesKernel => k
+      }.size).sum).sum
+    val docs = Tables.load(spark, sfDir, "documents")
+    assert(kernels(Dedup.portableMinHashPairs(docs, minJaccard = 0.4)) === 1)
+    assert(kernels(Dedup.minHashCalibration(docs)) === 1)
+    assert(kernels(Dedup.minHashLshPairs(docs, numHashes = 32, bands = 16, minJaccard = 0.4)) === 1)
+    assert(kernels(Dedup.nearDupAgainst(docs.filter(col("doc_id") % 2 === 0),
+      docs.filter(col("doc_id") % 2 === 1), minJaccard = 0.4)) === 1)
+  }
+
   test("prefixFilterPairs: exact jaccard on a known pair, no spurious pairs") {
     val s2 = spark; import s2.implicits._
     val df = Seq((1L, "w1 w2 w3 w4"), (2L, "w1 w2 w3 w4 w5"), (3L, "q r s t"))
