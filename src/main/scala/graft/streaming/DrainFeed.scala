@@ -44,13 +44,54 @@ private[streaming] object DrainFeed {
     * changing the watermark the replay's semantics pin). */
   private val FeedChunkRows = 65536
 
-  def run[T, R: Encoder](
+  /** The key the replay sentinels ride on; filtered out of the result. */
+  private val SentinelKey = " drain"
+
+  /** Replay a BATCH tick frame through a live monitor and return its
+    * drained window frame: collect at most `maxDriveRows` ticks in one
+    * scan (`limit(cap + 1)`; only when the cap is exceeded, a second job
+    * takes the first `cap` rows in drive order), sort them on the driver
+    * in drive order, and [[run]] them with two far-future sentinels at
+    * `lastTs + 2·bucketUs` (arming) and `lastTs + 4·bucketUs` (applying)
+    * on a key of their own, which is dropped from the result.
+    *
+    * `typed` has the columns `key`, `tsUs` and one value column;
+    * `order` gives a tick's drive order `(tsUs, key, value)`, and
+    * `sentinel(key, tsUs)` builds a sentinel tick. */
+  def replay[T: Encoder, R: Encoder](
+      typed: Dataset[T],
+      order: T => (Long, String, String),
+      sentinel: (String, Long) => T,
+      bucketUs: Long,
+      maxDriveRows: Long,
+      sinkPrefix: String)(build: Dataset[T] => Dataset[R]): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    // clamp before toIntExact: an "effectively unbounded" cap degrades
+    // to the largest representable limit instead of overflowing
+    val capRows = math.toIntExact(math.min(maxDriveRows, Int.MaxValue - 1L))
+    val firstPass = typed.limit(capRows + 1).collect()
+    val collected =
+      if (firstPass.length <= maxDriveRows) firstPass
+      else typed.orderBy((Seq("tsUs", "key") ++
+          typed.columns.filterNot(Set("tsUs", "key"))).map(col): _*)
+        .limit(capRows).collect()
+    val fed = collected.sortBy(order).toIndexedSeq
+    val lastTs = if (fed.isEmpty) 0L else order(fed.last)._1
+    run[T, R](typed.sparkSession, fed,
+        Seq(sentinel(SentinelKey, lastTs + 2L * bucketUs),
+          sentinel(SentinelKey, lastTs + 4L * bucketUs)),
+        build, sinkPrefix,
+        distinctKeys = fed.iterator.map(order(_)._2).toSet.size + 1)
+      .filter(col("key") =!= SentinelKey)
+  }
+
+  private def run[T, R: Encoder](
       spark: SparkSession,
       fed: IndexedSeq[T],
       sentinels: Seq[T],
       build: Dataset[T] => Dataset[R],
       sinkPrefix: String,
-      distinctKeys: Int = Int.MaxValue)(implicit enc: Encoder[T]): DataFrame = {
+      distinctKeys: Int)(implicit enc: Encoder[T]): DataFrame = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val ms = MemoryStream[T](spark)
     val sink = sinkPrefix + java.util.UUID.randomUUID().toString.replace("-", "")

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder}
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** One frequency observation for [[StreamingAms]]: stream key, event
   * time, and the member whose per-window second frequency moment is
@@ -11,9 +10,9 @@ final case class AmsTick(key: String, tsUs: Long, member: String)
 /** Keyed state: the highest FINALIZED window slot plus the still-open
   * slots' counter vectors (depth·reps = 24 signed longs each). Open-slot
   * count is bounded by (watermark lag / bucket) — per-key constant state
-  * once the lag is fixed, the [[StreamingResample]] bound; counters are
-  * CONSTANT SIZE per slot regardless of member volume (the point of
-  * carrying AMS instead of per-key frequency counts). */
+  * once the lag is fixed; counters are CONSTANT SIZE per slot regardless
+  * of member volume (the point of carrying AMS instead of per-key
+  * frequency counts). */
 final case class AmsState(doneSlot: Option[Long], open: Map[Long, Seq[Long]])
 
 /** One finalized per-window sketch row — the column contract of
@@ -28,9 +27,8 @@ final case class AmsWindowRow(
 /** [[graft.operators.Sketches.amsF2]] as a LIVE per-window monitor —
   * "how concentrated was key X's member traffic in each window" (F₂ =
   * Σf², the self-join size / skew read), emitted the moment the window
-  * becomes FINAL (watermark past its end; every row immutable — the T7
-  * exactly-once contract, the [[StreamingHll]]/[[StreamingHdr]]
-  * finalization discipline). Completes the streaming sketch tier:
+  * becomes FINAL (watermark past its end; every row immutable — the
+  * [[EventTimeSlots]] lifecycle). Completes the streaming sketch tier:
   * cardinality (HLL), quantiles (HDR), and now frequency moments (AMS).
   *
   * Batch equivalence is THE correctness contract (spec-asserted): the
@@ -43,11 +41,8 @@ final case class AmsWindowRow(
   * order-insensitive by construction.
   *
   * State per key: 24 longs per open window — constant in member volume.
-  * Key population follows the [[StreamingHll]] contract verbatim:
-  * `dropIdleAfterUs = None` retains (doneSlot, empty) forever (the
-  * caller-owned bounded-key-domain contract); `Some(ttl)` retires keys
-  * idle past `ttl` of watermark time via `state.remove()`, accepting
-  * the documented boundary-instant duplicate-emission trade on revival. */
+  * Key population follows the [[EventTimeSlots]] `dropIdleAfterUs`
+  * contract. */
 object StreamingAms {
 
   /** Geometry — pinned to the batch sketch's defaults; the contract is
@@ -120,50 +115,10 @@ object StreamingAms {
       salt: String = "",
       dropIdleAfterUs: Option[Long] = None)(
       implicit se: Encoder[AmsState],
-      re: Encoder[AmsWindowRow]): Dataset[AmsWindowRow] = {
-    require(bucketUs > 0, s"bucketUs $bucketUs must be positive")
-    require(dropIdleAfterUs.forall(_ > 0L),
-      s"dropIdleAfterUs $dropIdleAfterUs must be positive when set")
-    import ds.sparkSession.implicits._
-    import org.apache.spark.sql.functions.{col, timestamp_micros}
-    val withTime = ds
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[AmsTick]
-    withTime
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[AmsState, AmsWindowRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, ticks, state) =>
-          val old = state.getOption.getOrElse(AmsState(None, Map.empty))
-          val wm = state.getCurrentWatermarkMs() * 1000L
-          val batch = ticks.toSeq
-          val (rows, next) = step(old, batch, bucketUs, salt, wm)
-          if (next.open.nonEmpty) {
-            state.update(next)
-            // re-arm on the earliest still-open close boundary (the
-            // StreamingResample ceil-and-clamp rule) so empty batches
-            // keep finalizing as the watermark advances
-            val s = next.open.keys.min
-            val armAt = ((s + 1) * bucketUs + 999L) / 1000L
-            state.setTimeoutTimestamp(
-              math.max(armAt, state.getCurrentWatermarkMs() + 1L))
-          } else dropIdleAfterUs match {
-            case Some(_) if state.hasTimedOut && batch.isEmpty && old.open.isEmpty =>
-              // the idle-TTL arm fired with nothing new since: retire the
-              // key (doneSlot forgotten — the documented revival trade)
-              state.remove()
-            case Some(ttl) =>
-              // newly idle: arm the TTL in watermark time
-              state.update(next)
-              state.setTimeoutTimestamp(
-                state.getCurrentWatermarkMs() + math.max(ttl / 1000L, 1L))
-            case None =>
-              // default: retain (doneSlot, empty) forever — the explicit
-              // bounded-key-domain contract
-              state.update(next)
-          }
-          rows.iterator.map(_.copy(key = key))
-      }
-  }
+      re: Encoder[AmsWindowRow]): Dataset[AmsWindowRow] =
+    EventTimeSlots[AmsTick, AmsState, AmsWindowRow](
+      ds, _.key, bucketUs, watermarkDelay, dropIdleAfterUs,
+      AmsState(None, Map.empty), _.open.keys,
+      (old, batch, wmUs) => step(old, batch, bucketUs, salt, wmUs),
+      (r, key) => r.copy(key = key))
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder}
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** One scored prediction for [[StreamingAuc]]: stream key, event time,
   * the INTEGRAL micro-probability score (the
@@ -30,8 +29,7 @@ final case class AucWindowRow(
 /** [[graft.operators.Quality.rocAuc]] + ECE as a LIVE per-window monitor
   * — "what is the quality gate's AUC and calibration error THIS hour" —
   * emitted the moment a window becomes FINAL (watermark past its end,
-  * every row immutable: the T7 exactly-once contract, the
-  * [[StreamingHll]]/[[StreamingAms]] finalization discipline). The
+  * every row immutable: the [[EventTimeSlots]] lifecycle). The
   * natural next member of the drift family: [[StreamingCusum]] watches a
   * mean, [[StreamingAms]] watches concentration, THIS watches a
   * classifier's ranking power and probability calibration against
@@ -52,11 +50,8 @@ final case class AucWindowRow(
   * int64 (2·nPos·nNeg < 2⁶³ needs nPos, nNeg < 2³¹; the
   * [[StreamingAms]] exactness-bound discipline).
   *
-  * Key population follows the [[StreamingHll]] contract verbatim:
-  * `dropIdleAfterUs = None` retains (doneSlot, empty) forever (the
-  * caller-owned bounded-key-domain contract); `Some(ttl)` retires idle
-  * keys via `state.remove()`, accepting the documented
-  * boundary-instant duplicate-emission trade on revival. */
+  * Key population follows the [[EventTimeSlots]] `dropIdleAfterUs`
+  * contract. */
 object StreamingAuc {
 
   private val M = 1000000L
@@ -147,45 +142,11 @@ object StreamingAuc {
       dropIdleAfterUs: Option[Long] = None)(
       implicit se: Encoder[AucState],
       re: Encoder[AucWindowRow]): Dataset[AucWindowRow] = {
-    require(bucketUs > 0, s"bucketUs $bucketUs must be positive")
     require(maxCells >= 1, s"maxCells $maxCells must be positive")
-    require(dropIdleAfterUs.forall(_ > 0L),
-      s"dropIdleAfterUs $dropIdleAfterUs must be positive when set")
-    import ds.sparkSession.implicits._
-    import org.apache.spark.sql.functions.{col, timestamp_micros}
-    val withTime = ds
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[AucTick]
-    withTime
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[AucState, AucWindowRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, ticks, state) =>
-          val old = state.getOption.getOrElse(AucState(None, Map.empty))
-          val wm = state.getCurrentWatermarkMs() * 1000L
-          val batch = ticks.toSeq
-          val (rows, next) = step(old, batch, bucketUs, wm, maxCells)
-          if (next.open.nonEmpty) {
-            state.update(next)
-            // re-arm on the earliest still-open close boundary (the
-            // StreamingResample ceil-and-clamp rule) so empty batches
-            // keep finalizing as the watermark advances
-            val s = next.open.keys.min
-            val armAt = ((s + 1) * bucketUs + 999L) / 1000L
-            state.setTimeoutTimestamp(
-              math.max(armAt, state.getCurrentWatermarkMs() + 1L))
-          } else dropIdleAfterUs match {
-            case Some(_) if state.hasTimedOut && batch.isEmpty && old.open.isEmpty =>
-              state.remove()
-            case Some(ttl) =>
-              state.update(next)
-              state.setTimeoutTimestamp(
-                state.getCurrentWatermarkMs() + math.max(ttl / 1000L, 1L))
-            case None =>
-              state.update(next)
-          }
-          rows.iterator.map(_.copy(key = key))
-      }
+    EventTimeSlots[AucTick, AucState, AucWindowRow](
+      ds, _.key, bucketUs, watermarkDelay, dropIdleAfterUs,
+      AucState(None, Map.empty), _.open.keys,
+      (old, batch, wmUs) => step(old, batch, bucketUs, wmUs, maxCells),
+      (r, key) => r.copy(key = key))
   }
 }

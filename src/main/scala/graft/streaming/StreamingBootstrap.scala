@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder}
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** One observation for [[StreamingBootstrap]]: stream key, event time,
   * the row's stable id (the resampling unit — weights derive from it,
@@ -31,8 +30,8 @@ final case class BootWindowRow(
 /** [[graft.operators.Sampling.poissonBootstrapMean]] as a LIVE
   * per-window monitor — "the hourly mean moved: is the move bigger than
   * resampling noise?" with the CI emitted the moment the window is
-  * watermark-FINAL (the [[StreamingAuc]]/[[StreamingKs]] finalization
-  * discipline: append-mode rows, immutable, T7 exactly-once). The
+  * watermark-FINAL (the [[EventTimeSlots]] lifecycle: append-mode
+  * rows, immutable, exactly-once). The
   * inference member of the drift family: CUSUM flags a mean shift,
   * StreamingKs a distribution shift — THIS prices the window's own
   * sampling noise so a dashboard can tell signal from jitter.
@@ -48,7 +47,7 @@ final case class BootWindowRow(
   * Guards (fail-loud): |x| ≤ 10⁶ per tick and n < 2³⁰ per window keep
   * Σw·x < 2⁵³ — exact in int64 AND in the double division (the
   * [[StreamingAms]] exactness discipline). Key population follows the
-  * [[StreamingHll]] dropIdleAfterUs contract verbatim. */
+  * [[EventTimeSlots]] `dropIdleAfterUs` contract. */
 object StreamingBootstrap {
 
   import graft.operators.Sampling
@@ -136,46 +135,15 @@ object StreamingBootstrap {
       dropIdleAfterUs: Option[Long] = None)(
       implicit se: Encoder[BootState],
       re: Encoder[BootWindowRow]): Dataset[BootWindowRow] = {
-    require(bucketUs > 0, s"bucketUs $bucketUs must be positive")
     require(replicates >= 8 && replicates <= 512,
       s"replicates $replicates outside [8, 512]")
     require(alphaPct >= 1 && alphaPct <= 20, s"alphaPct $alphaPct outside [1, 20]")
     require(salt.forall(_ < 0x80), s"non-ASCII salt '$salt' breaks the byte fold")
-    require(dropIdleAfterUs.forall(_ > 0L),
-      s"dropIdleAfterUs $dropIdleAfterUs must be positive when set")
-    import ds.sparkSession.implicits._
-    import org.apache.spark.sql.functions.{col, timestamp_micros}
-    val withTime = ds
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[BootTick]
-    withTime
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[BootState, BootWindowRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, ticks, state) =>
-          val old = state.getOption.getOrElse(BootState(None, Map.empty))
-          val wm = state.getCurrentWatermarkMs() * 1000L
-          val batch = ticks.toSeq
-          val (rows, next) =
-            step(old, batch, bucketUs, wm, replicates, salt, alphaPct)
-          if (next.open.nonEmpty) {
-            state.update(next)
-            val s = next.open.keys.min
-            val armAt = ((s + 1) * bucketUs + 999L) / 1000L
-            state.setTimeoutTimestamp(
-              math.max(armAt, state.getCurrentWatermarkMs() + 1L))
-          } else dropIdleAfterUs match {
-            case Some(_) if state.hasTimedOut && batch.isEmpty && old.open.isEmpty =>
-              state.remove()
-            case Some(ttl) =>
-              state.update(next)
-              state.setTimeoutTimestamp(
-                state.getCurrentWatermarkMs() + math.max(ttl / 1000L, 1L))
-            case None =>
-              state.update(next)
-          }
-          rows.iterator.map(_.copy(key = key))
-      }
+    EventTimeSlots[BootTick, BootState, BootWindowRow](
+      ds, _.key, bucketUs, watermarkDelay, dropIdleAfterUs,
+      BootState(None, Map.empty), _.open.keys,
+      (old, batch, wmUs) =>
+        step(old, batch, bucketUs, wmUs, replicates, salt, alphaPct),
+      (r, key) => r.copy(key = key))
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder}
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** One observation for [[StreamingConformal]]: stream key, event time,
   * the INTEGRAL pre-quantized gate score (the
@@ -47,8 +46,8 @@ final case class ConformalWindowRow(
   * efficiency readout.
   *
   * Windows are emitted the moment they are watermark-FINAL (the
-  * [[StreamingKs]]/[[StreamingAuc]] finalization discipline — rows
-  * immutable, T7 exactly-once); late ticks for finalized slots drop.
+  * [[EventTimeSlots]] lifecycle — rows immutable, exactly-once); late
+  * ticks for finalized slots drop.
   * Batch equivalence is spec-asserted: each drained row's counts are
   * exact integer sums over the (key, slot) tick slice, and
   * coverage/cov_hi/far reproduce the batch column arithmetic
@@ -57,8 +56,8 @@ final case class ConformalWindowRow(
   * Guards: per-window side counts beyond 2⁶² cannot occur (counters are
   * increments); rates NULL on empty sides (undefined, never 0); breach
   * NULL when no good rows arrived — an empty window is not evidence of
-  * drift. Key population follows the [[StreamingHll]] dropIdleAfterUs
-  * contract verbatim. */
+  * drift. Key population follows the [[EventTimeSlots]]
+  * `dropIdleAfterUs` contract. */
 object StreamingConformal {
 
   private def r6(x: Double) =
@@ -127,44 +126,13 @@ object StreamingConformal {
       dropIdleAfterUs: Option[Long] = None)(
       implicit se: Encoder[ConformalState],
       re: Encoder[ConformalWindowRow]): Dataset[ConformalWindowRow] = {
-    require(bucketUs > 0, s"bucketUs $bucketUs must be positive")
     require(alphaNum >= 1 && alphaNum < alphaDen,
       s"StreamingConformal: alpha $alphaNum/$alphaDen outside (0, 1)")
-    require(dropIdleAfterUs.forall(_ > 0L),
-      s"dropIdleAfterUs $dropIdleAfterUs must be positive when set")
-    import ds.sparkSession.implicits._
-    import org.apache.spark.sql.functions.{col, timestamp_micros}
-    val withTime = ds
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[ConformalTick]
-    withTime
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[ConformalState, ConformalWindowRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, ticks, state) =>
-          val old = state.getOption.getOrElse(ConformalState(None, Map.empty))
-          val wm = state.getCurrentWatermarkMs() * 1000L
-          val batch = ticks.toSeq
-          val (rows, next) =
-            step(old, batch, tau, bucketUs, wm, alphaNum, alphaDen)
-          if (next.open.nonEmpty) {
-            state.update(next)
-            val s = next.open.keys.min
-            val armAt = ((s + 1) * bucketUs + 999L) / 1000L
-            state.setTimeoutTimestamp(
-              math.max(armAt, state.getCurrentWatermarkMs() + 1L))
-          } else dropIdleAfterUs match {
-            case Some(_) if state.hasTimedOut && batch.isEmpty && old.open.isEmpty =>
-              state.remove()
-            case Some(ttl) =>
-              state.update(next)
-              state.setTimeoutTimestamp(
-                state.getCurrentWatermarkMs() + math.max(ttl / 1000L, 1L))
-            case None =>
-              state.update(next)
-          }
-          rows.iterator.map(_.copy(key = key))
-      }
+    EventTimeSlots[ConformalTick, ConformalState, ConformalWindowRow](
+      ds, _.key, bucketUs, watermarkDelay, dropIdleAfterUs,
+      ConformalState(None, Map.empty), _.open.keys,
+      (old, batch, wmUs) =>
+        step(old, batch, tau, bucketUs, wmUs, alphaNum, alphaDen),
+      (r, key) => r.copy(key = key))
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder}
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** One raw observation for [[StreamingCoverage]] — only the stream key
   * and the event time matter; gap accounting ignores payloads. */
@@ -10,8 +9,7 @@ final case class CoverageTick(key: String, tsUs: Long)
 /** Keyed state: the highest FINALIZED observed bucket (everything at or
   * below it is immutable history) plus the still-open observed buckets
   * above it. `pending` is bounded by (watermark lag / bucket) buckets —
-  * per-key constant state once the lag is fixed, the
-  * [[StreamingResample]] bound. */
+  * per-key constant state once the lag is fixed. */
 final case class CoverageState(lastFinal: Option[Long], pending: Set[Long])
 
 /** One emitted gap run (append-mode, final — the watermark has passed
@@ -26,7 +24,7 @@ final case class CoverageGapRow(
   * watermark passes the closing bucket (a late tick inside the hole
   * could still arrive before that), so rows emit exactly then, and
   * every row is immutable (exactly-once with a checkpointed sink, the
-  * T7 contract).
+  * [[EventTimeSlots]] lifecycle).
   *
   * Batch equivalence is THE correctness contract (spec-asserted): after
   * the stream drains and the watermark passes every observed bucket,
@@ -37,8 +35,8 @@ final case class CoverageGapRow(
   * same boundary the batch ledger draws).
   *
   * State per key: one scalar + the open-bucket set (watermark-lag
-  * bounded). Key population is caller-owned, as with
-  * [[StreamingFunnel]]: bounded key domains only. */
+  * bounded). No idle TTL: key population is caller-owned, bounded key
+  * domains only (the [[EventTimeSlots]] `None` contract). */
 object StreamingCoverage {
 
   /** The pure per-key transition (extracted for property tests): fold a
@@ -77,32 +75,10 @@ object StreamingCoverage {
       bucketUs: Long,
       watermarkDelay: String)(
       implicit se: Encoder[CoverageState],
-      re: Encoder[CoverageGapRow]): Dataset[CoverageGapRow] = {
-    require(bucketUs > 0, s"bucketUs $bucketUs must be positive")
-    import ds.sparkSession.implicits._
-    import org.apache.spark.sql.functions.{col, timestamp_micros}
-    val withTime = ds
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[CoverageTick]
-    withTime
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[CoverageState, CoverageGapRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, ticks, state) =>
-          val old = state.getOption.getOrElse(CoverageState(None, Set.empty))
-          val wm = state.getCurrentWatermarkMs() * 1000L
-          val (rows, next) = step(old, ticks.toSeq, bucketUs, wm)
-          state.update(next)
-          // re-arm on the earliest still-open close boundary (the
-          // StreamingResample ceil-and-clamp rule) so empty batches
-          // keep finalizing as the watermark advances
-          next.pending.minOption.foreach { s =>
-            val armAt = ((s + 1) * bucketUs + 999L) / 1000L
-            state.setTimeoutTimestamp(
-              math.max(armAt, state.getCurrentWatermarkMs() + 1L))
-          }
-          rows.iterator.map(_.copy(key = key))
-      }
-  }
+      re: Encoder[CoverageGapRow]): Dataset[CoverageGapRow] =
+    EventTimeSlots[CoverageTick, CoverageState, CoverageGapRow](
+      ds, _.key, bucketUs, watermarkDelay, None,
+      CoverageState(None, Set.empty), _.pending,
+      (old, batch, wmUs) => step(old, batch, bucketUs, wmUs),
+      (r, key) => r.copy(key = key))
 }

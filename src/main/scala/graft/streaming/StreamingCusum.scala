@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder}
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** One raw observation for [[StreamingCusum]]: stream key, event time,
   * and the tick's additive contribution to its bucket. */
@@ -40,8 +39,9 @@ final case class CusumAlertRow(
   * makes the key permanently silent — batch drops it, the stream never
   * emits it. Gap buckets do not exist in either frame (the
   * [[StreamingEwma]] contract). State per key: ≤ refSlots pairs before
-  * freezing, two longs + two doubles after — constant; key population
-  * is caller-owned (the [[StreamingFunnel]] rule). */
+  * freezing, two longs + two doubles after — constant; no idle TTL, so
+  * key population is caller-owned (the [[EventTimeSlots]] `None`
+  * contract). */
 object StreamingCusum {
 
   /** z in exact micro-units: round((xq − μ)/σ, 6) · 10⁶ — the batch
@@ -124,32 +124,13 @@ object StreamingCusum {
       quantDecimals: Int = 0)(
       implicit se: Encoder[CusumState],
       re: Encoder[CusumAlertRow]): Dataset[CusumAlertRow] = {
-    require(bucketUs > 0, s"bucketUs $bucketUs must be positive")
     require(refSlots >= 2, s"refSlots $refSlots must be >= 2")
     require(slack >= 0, s"slack $slack must be >= 0")
-    import ds.sparkSession.implicits._
-    import org.apache.spark.sql.functions.{col, timestamp_micros}
-    val withTime = ds
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[CusumTick]
-    withTime
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[CusumState, CusumAlertRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, ticks, state) =>
-          val old = state.getOption.getOrElse(
-            CusumState(Vector.empty, None, None, 0L, 0L, None, Map.empty))
-          val wm = state.getCurrentWatermarkMs() * 1000L
-          val (rows, next) = step(old, ticks.toSeq, bucketUs, wm,
-            refSlots, slack, threshold, quantDecimals)
-          state.update(next)
-          next.open.keys.minOption.foreach { s =>
-            val armAt = ((s + 1) * bucketUs + 999L) / 1000L
-            state.setTimeoutTimestamp(
-              math.max(armAt, state.getCurrentWatermarkMs() + 1L))
-          }
-          rows.iterator.map(_.copy(key = key))
-      }
+    EventTimeSlots[CusumTick, CusumState, CusumAlertRow](
+      ds, _.key, bucketUs, watermarkDelay, None,
+      CusumState(Vector.empty, None, None, 0L, 0L, None, Map.empty), _.open.keys,
+      (old, batch, wmUs) => step(old, batch, bucketUs, wmUs,
+        refSlots, slack, threshold, quantDecimals),
+      (r, key) => r.copy(key = key))
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder}
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** One raw observation for [[StreamingEwma]]: stream key, event time,
   * and the tick's additive contribution to its bucket (1.0 for count
@@ -11,7 +10,7 @@ final case class EwmaTick(key: String, tsUs: Long, value: Double)
 /** Keyed state: the trailing `window` FINALIZED (slot, quantized value)
   * pairs — the chart's memory, constant-size by construction — plus the
   * still-open bucket sums above the finalized frontier (watermark-lag /
-  * bucket bounded, the [[StreamingCoverage]] bound). */
+  * bucket bounded). */
 final case class EwmaState(
     finalized: Vector[(Long, Long)], open: Map[Long, Double])
 
@@ -25,8 +24,8 @@ final case class EwmaAlertRow(
 
 /** [[graft.operators.Trend.ewmaChart]] as a LIVE monitor — the EWMA
   * control chart emitted bucket by bucket the moment each bucket becomes
-  * FINAL (its end at or before the watermark), instead of a batch read
-  * of the last bucket only.
+  * FINAL (its end at or before the watermark; the [[EventTimeSlots]]
+  * lifecycle), instead of a batch read of the last bucket only.
   *
   * Batch equivalence is THE correctness contract (spec-asserted): the
   * row emitted for bucket t carries exactly the numbers
@@ -38,8 +37,8 @@ final case class EwmaAlertRow(
   * job when wanted).
   *
   * State per key: `window` (slot, long) pairs + the open-bucket map —
-  * constant once the watermark lag is fixed. Key population is
-  * caller-owned (bounded key domains), the [[StreamingFunnel]] rule. */
+  * constant once the watermark lag is fixed. No idle TTL: key population
+  * is caller-owned (the [[EventTimeSlots]] `None` contract). */
 object StreamingEwma {
 
   /** The batch chart's scoring arithmetic on one key's trailing history
@@ -124,33 +123,14 @@ object StreamingEwma {
       quantDecimals: Int = 2)(
       implicit se: Encoder[EwmaState],
       re: Encoder[EwmaAlertRow]): Dataset[EwmaAlertRow] = {
-    require(bucketUs > 0, s"bucketUs $bucketUs must be positive")
     require(window >= 2 && window <= 25,
       s"window $window outside [2, 25] (the Trend.ewmaChart bound)")
     require(minPriors >= 2, s"minPriors $minPriors must be >= 2")
-    import ds.sparkSession.implicits._
-    import org.apache.spark.sql.functions.{col, timestamp_micros}
-    val withTime = ds
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[EwmaTick]
-    withTime
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[EwmaState, EwmaAlertRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, ticks, state) =>
-          val old = state.getOption
-            .getOrElse(EwmaState(Vector.empty, Map.empty))
-          val wm = state.getCurrentWatermarkMs() * 1000L
-          val (rows, next) = step(old, ticks.toSeq, bucketUs, wm,
-            window, limit, minPriors, quantDecimals)
-          state.update(next)
-          next.open.keys.minOption.foreach { s =>
-            val armAt = ((s + 1) * bucketUs + 999L) / 1000L
-            state.setTimeoutTimestamp(
-              math.max(armAt, state.getCurrentWatermarkMs() + 1L))
-          }
-          rows.iterator.map(_.copy(key = key))
-      }
+    EventTimeSlots[EwmaTick, EwmaState, EwmaAlertRow](
+      ds, _.key, bucketUs, watermarkDelay, None,
+      EwmaState(Vector.empty, Map.empty), _.open.keys,
+      (old, batch, wmUs) => step(old, batch, bucketUs, wmUs,
+        window, limit, minPriors, quantDecimals),
+      (r, key) => r.copy(key = key))
   }
 }

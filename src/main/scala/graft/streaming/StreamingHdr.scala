@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder}
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** One value observation for [[StreamingHdr]]: stream key, event time,
   * and the non-negative int64 value whose per-window distribution is
@@ -26,8 +25,7 @@ final case class HdrWindowRow(
 /** [[graft.operators.Sketches.hdrQuantiles]] as a LIVE per-window
   * monitor — "what were key X's p50/p90/p99 in each window", emitted
   * the moment the window becomes FINAL (watermark past its end; every
-  * row immutable — the T7 exactly-once contract, the
-  * [[StreamingCoverage]] / [[StreamingHll]] finalization discipline).
+  * row immutable — the [[EventTimeSlots]] lifecycle).
   *
   * Batch equivalence is THE correctness contract (spec-asserted): the
   * drained stream's rows equal `Sketches.hdrQuantiles` grouped by
@@ -42,7 +40,7 @@ final case class HdrWindowRow(
   * late-drop contract holds); pass `dropIdleAfterUs = Some(ttl)` to
   * retire keys idle past `ttl` of watermark time, accepting the
   * boundary-instant duplicate-emission trade on revival — see
-  * [[StreamingHll]]'s scaladoc for the full contract (r15, ADVICE). */
+  * [[EventTimeSlots]] for the full contract. */
 object StreamingHdr {
 
   /** HDR bucket lower/upper bounds of a non-negative value — the JVM
@@ -115,44 +113,13 @@ object StreamingHdr {
       dropIdleAfterUs: Option[Long] = None)(
       implicit se: Encoder[HdrState],
       re: Encoder[HdrWindowRow]): Dataset[HdrWindowRow] = {
-    require(bucketUs > 0, s"bucketUs $bucketUs must be positive")
-    require(dropIdleAfterUs.forall(_ > 0L),
-      s"dropIdleAfterUs $dropIdleAfterUs must be positive when set")
     require(subBits >= 1 && subBits <= 16, s"subBits $subBits outside [1, 16]")
     require(qs.nonEmpty && qs.forall { case (_, q) => q >= 0.0 && q <= 1.0 },
       s"quantiles must be in [0,1]: $qs")
-    import ds.sparkSession.implicits._
-    import org.apache.spark.sql.functions.{col, timestamp_micros}
-    val withTime = ds
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[HdrTick]
-    withTime
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[HdrState, HdrWindowRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, ticks, state) =>
-          val old = state.getOption.getOrElse(HdrState(None, Map.empty))
-          val wm = state.getCurrentWatermarkMs() * 1000L
-          val batch = ticks.toSeq
-          val (rows, next) = step(old, batch, bucketUs, subBits, qs, wm)
-          if (next.open.nonEmpty) {
-            state.update(next)
-            val s = next.open.keys.min
-            val armAt = ((s + 1) * bucketUs + 999L) / 1000L
-            state.setTimeoutTimestamp(
-              math.max(armAt, state.getCurrentWatermarkMs() + 1L))
-          } else dropIdleAfterUs match {
-            case Some(_) if state.hasTimedOut && batch.isEmpty && old.open.isEmpty =>
-              state.remove() // idle-TTL fired: retire the key (see scaladoc)
-            case Some(ttl) =>
-              state.update(next)
-              state.setTimeoutTimestamp(
-                state.getCurrentWatermarkMs() + math.max(ttl / 1000L, 1L))
-            case None =>
-              state.update(next)
-          }
-          rows.iterator.map(_.copy(key = key))
-      }
+    EventTimeSlots[HdrTick, HdrState, HdrWindowRow](
+      ds, _.key, bucketUs, watermarkDelay, dropIdleAfterUs,
+      HdrState(None, Map.empty), _.open.keys,
+      (old, batch, wmUs) => step(old, batch, bucketUs, subBits, qs, wmUs),
+      (r, key) => r.copy(key = key))
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder}
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** One observation for [[StreamingHeavyHitters]]: stream key, event
   * time, and the item whose frequency is being watched (token, URL
@@ -46,8 +45,7 @@ final case class HhWindowRow(
   * batching — the spec-asserted contract.
   *
   * Windows finalize in slot order when watermark-FINAL (the
-  * [[StreamingKs]]/[[StreamingConformal]] T7 discipline; late ticks
-  * drop); emitted items order by (est desc, item) with ranks 1..m. */
+  * [[EventTimeSlots]] lifecycle; late ticks drop); emitted items order by (est desc, item) with ranks 1..m. */
 object StreamingHeavyHitters {
 
   /** The pure per-key transition (extracted for property tests). */
@@ -97,68 +95,26 @@ object StreamingHeavyHitters {
       re: Encoder[HhWindowRow]): Dataset[HhWindowRow] = {
     require(capacity >= 1 && capacity <= 4096,
       s"capacity $capacity outside [1, 4096] — the summary IS the state bound")
-    require(bucketUs > 0, s"bucketUs $bucketUs must be positive")
-    require(dropIdleAfterUs.forall(_ > 0L),
-      s"dropIdleAfterUs $dropIdleAfterUs must be positive when set")
-    import ds.sparkSession.implicits._
-    import org.apache.spark.sql.functions.{col, timestamp_micros}
-    val withTime = ds
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[HhTick]
-    withTime
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[HhState, HhWindowRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, ticks, state) =>
-          val old = state.getOption.getOrElse(HhState(None, Map.empty))
-          val wm = state.getCurrentWatermarkMs() * 1000L
-          val batch = ticks.toSeq
-          val (rows, next) = step(old, batch, capacity, bucketUs, wm)
-          if (next.open.nonEmpty) {
-            state.update(next)
-            val s = next.open.keys.min
-            val armAt = ((s + 1) * bucketUs + 999L) / 1000L
-            state.setTimeoutTimestamp(
-              math.max(armAt, state.getCurrentWatermarkMs() + 1L))
-          } else dropIdleAfterUs match {
-            case Some(_) if state.hasTimedOut && batch.isEmpty && old.open.isEmpty =>
-              state.remove()
-            case Some(ttl) =>
-              state.update(next)
-              state.setTimeoutTimestamp(
-                state.getCurrentWatermarkMs() + math.max(ttl / 1000L, 1L))
-            case None =>
-              state.update(next)
-          }
-          rows.iterator.map(_.copy(key = key))
-      }
+    EventTimeSlots[HhTick, HhState, HhWindowRow](
+      ds, _.key, bucketUs, watermarkDelay, dropIdleAfterUs,
+      HhState(None, Map.empty), _.open.keys,
+      (old, batch, wmUs) => step(old, batch, capacity, bucketUs, wmUs),
+      (r, key) => r.copy(key = key))
   }
 
   /** Drive a BATCH tick frame through the live stream and return the
-    * DRAINED window frame — the q279-style oracle-witness pattern
-    * applied to a streaming surface (r18 verdict item 4): feeds the
-    * caller's (key, tsUs, item) rows to a MemoryStream together with an
-    * ARMING far-future sentinel as one micro-batch (the first batch's
-    * watermark is -inf, so nothing can drop late and nothing closes —
-    * the sentinel only raises the NEXT batch's watermark), then one
-    * APPLYING sentinel batch that closes every real (key, slot) window
-    * at once (the watermark a batch closes against is the PREVIOUS
-    * batch's maximum; state timeouts fire for keys with no new rows),
-    * blocks until every window FINALIZES, and returns the emitted rows
-    * minus the sentinel key — two micro-batches, the minimum (see
-    * [[DrainFeed]]), with a drained frame bit-identical to the original
-    * three-batch drive (per-key tick multiset per batch unchanged). With `capacity` above the per-(key, slot)
-    * distinct-item count every window drains with zero decrements —
-    * `exact = true` — and the MG contract makes the result a pure
-    * function of the tick multiset, replayable as batch GROUP-BY SQL:
-    * the registered q280 DuckDB gate. The driver-side materialization
-    * is the MemoryStream feed contract (a replay/test harness, not the
-    * production source path — that is `readStream` into the same
-    * flatMapGroupsWithState); `maxDriveRows` caps the driven prefix
-    * (first rows by (tsUs, key, item)) so the replay stays
-    * driver-feasible at 100x fixture scale — a no-op at gate scales
-    * (<= 100k events). */
+    * DRAINED window frame ([[DrainFeed.replay]]) — the q279-style
+    * oracle-witness pattern applied to a streaming surface. With
+    * `capacity` above the per-(key, slot) distinct-item count every
+    * window drains with zero decrements — `exact = true` — and the MG
+    * contract makes the result a pure function of the tick multiset,
+    * replayable as batch GROUP-BY SQL: the registered q280 DuckDB gate.
+    * The driver-side materialization is the MemoryStream feed contract
+    * (a replay/test harness, not the production source path — that is
+    * `readStream` into the same flatMapGroupsWithState); `maxDriveRows`
+    * caps the driven prefix (first rows by (tsUs, key, item)) so the
+    * replay stays driver-feasible at 100x fixture scale — a no-op at
+    * gate scales (<= 100k events). */
   def drainedReplay(
       ticks: org.apache.spark.sql.DataFrame,
       capacity: Int,
@@ -171,28 +127,9 @@ object StreamingHeavyHitters {
       col("key").cast("string").as("key"),
       col("tsUs").cast("long").as("tsUs"),
       col("item").cast("string").as("item")).as[HhTick]
-    // one-scan drive collection (r19 optimization round): pull cap+1 rows
-    // and only fall back to the ordered-prefix job when the cap is
-    // actually exceeded — the previous count()-then-collect() paid two
-    // full scans of the tick source on every gate-scale drive
-    // ADVICE r19: clamp before toIntExact — a caller-supplied "effectively
-    // unbounded" cap (> Int.MaxValue−1) must degrade to the biggest
-    // representable limit, not throw ArithmeticException / overflow
-    val capRows = math.toIntExact(math.min(maxDriveRows, Int.MaxValue - 1L))
-    val firstPass = typed.limit(capRows + 1).collect()
-    val collected =
-      if (firstPass.length <= maxDriveRows) firstPass
-      else typed.orderBy(col("tsUs"), col("key"), col("item"))
-        .limit(capRows).collect()
-    val fed = collected.sortBy(t => (t.tsUs, t.key, t.item)).toIndexedSeq
-    val sentinelKey = " drain"
-    val lastTs = if (fed.isEmpty) 0L else fed.last.tsUs
-    DrainFeed.run[HhTick, HhWindowRow](sp, fed,
-        Seq(HhTick(sentinelKey, lastTs + 2L * bucketUs, "x"),
-          HhTick(sentinelKey, lastTs + 4L * bucketUs, "x")),
-        ds => apply(ds, capacity, bucketUs, watermarkDelay = "0 seconds"),
-        "hh_drain_",
-        distinctKeys = fed.iterator.map(_.key).toSet.size + 1)
-      .filter(col("key") =!= sentinelKey)
+    DrainFeed.replay[HhTick, HhWindowRow](typed, t => (t.tsUs, t.key, t.item),
+        (k, ts) => HhTick(k, ts, "x"), bucketUs, maxDriveRows,
+        "hh_drain_")(
+      ds => apply(ds, capacity, bucketUs, watermarkDelay = "0 seconds"))
   }
 }

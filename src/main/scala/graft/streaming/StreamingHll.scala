@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder}
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** One membership observation for [[StreamingHll]]: stream key, event
   * time, and the member whose per-window cardinality is being counted. */
@@ -10,9 +9,9 @@ final case class HllTick(key: String, tsUs: Long, member: String)
 /** Keyed state: the highest FINALIZED window slot plus the still-open
   * slots' register vectors (64 small ints each). Open-slot count is
   * bounded by (watermark lag / bucket) — per-key constant state once
-  * the lag is fixed, the [[StreamingResample]] bound; registers are
-  * CONSTANT SIZE per slot regardless of member volume (the whole point
-  * of carrying HLL instead of a member set). */
+  * the lag is fixed; registers are CONSTANT SIZE per slot regardless of
+  * member volume (the whole point of carrying HLL instead of a member
+  * set). */
 final case class HllState(doneSlot: Option[Long], open: Map[Long, Seq[Int]])
 
 /** One finalized per-window sketch row — the exact column contract of
@@ -25,8 +24,8 @@ final case class HllWindowRow(
 /** [[graft.operators.Sketches.hllDistinct]] as a LIVE per-window
   * monitor — "how many distinct users/tokens/documents did key X see in
   * each window", emitted the moment the window becomes FINAL (watermark
-  * past its end; every row immutable — the T7 exactly-once contract,
-  * the [[StreamingCoverage]] finalization discipline).
+  * past its end; every row immutable — the [[EventTimeSlots]]
+  * lifecycle).
   *
   * Batch equivalence is THE correctness contract (spec-asserted): the
   * drained stream's rows equal `Sketches.hllDistinct` grouped by
@@ -37,21 +36,10 @@ final case class HllWindowRow(
   * per-micro-batch folding is order-insensitive by construction.
   *
   * State per key: ~64 small ints per open window — constant in member
-  * volume. Key POPULATION, however, is unbounded by default: a key that
-  * goes quiet retains its (doneSlot, empty-map) record forever, because
-  * doneSlot is what makes the exactly-once late-drop contract hold for
-  * that key. Two modes (r15, ADVICE):
-  *  - `dropIdleAfterUs = None` (default): state grows with the LIFETIME
-  *    key domain — the caller-owned bounded-key-domain contract
-  *    ([[StreamingFunnel]]'s rule), now enforced as an explicit choice.
-  *  - `dropIdleAfterUs = Some(ttl)`: a key idle (no open windows, no
-  *    ticks) past `ttl` of WATERMARK time is retired via
-  *    `state.remove()`. A retired key that revives starts fresh —
-  *    doneSlot is forgotten, so a tick straddling the exact watermark
-  *    boundary could re-open (and re-emit) an already-finalized window:
-  *    the documented duplicate-emission trade. Spark's own watermark
-  *    late-row filter still drops anything strictly older than the
-  *    watermark, so the exposure is the boundary instant, not history. */
+  * volume. Key POPULATION is unbounded by default (`dropIdleAfterUs =
+  * None`: the caller-owned bounded-key-domain contract); `Some(ttl)`
+  * retires keys idle past `ttl` of watermark time, with the revival
+  * trade — both as the [[EventTimeSlots]] contract states them. */
 object StreamingHll {
 
   /** Register count (m), bit budget, and α_64 — pinned to the batch
@@ -117,50 +105,10 @@ object StreamingHll {
       salt: String = "",
       dropIdleAfterUs: Option[Long] = None)(
       implicit se: Encoder[HllState],
-      re: Encoder[HllWindowRow]): Dataset[HllWindowRow] = {
-    require(bucketUs > 0, s"bucketUs $bucketUs must be positive")
-    require(dropIdleAfterUs.forall(_ > 0L),
-      s"dropIdleAfterUs $dropIdleAfterUs must be positive when set")
-    import ds.sparkSession.implicits._
-    import org.apache.spark.sql.functions.{col, timestamp_micros}
-    val withTime = ds
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[HllTick]
-    withTime
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[HllState, HllWindowRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, ticks, state) =>
-          val old = state.getOption.getOrElse(HllState(None, Map.empty))
-          val wm = state.getCurrentWatermarkMs() * 1000L
-          val batch = ticks.toSeq
-          val (rows, next) = step(old, batch, bucketUs, salt, wm)
-          if (next.open.nonEmpty) {
-            state.update(next)
-            // re-arm on the earliest still-open close boundary (the
-            // StreamingResample ceil-and-clamp rule) so empty batches
-            // keep finalizing as the watermark advances
-            val s = next.open.keys.min
-            val armAt = ((s + 1) * bucketUs + 999L) / 1000L
-            state.setTimeoutTimestamp(
-              math.max(armAt, state.getCurrentWatermarkMs() + 1L))
-          } else dropIdleAfterUs match {
-            case Some(_) if state.hasTimedOut && batch.isEmpty && old.open.isEmpty =>
-              // the idle-TTL arm fired with nothing new since: retire the
-              // key (doneSlot forgotten — the documented revival trade)
-              state.remove()
-            case Some(ttl) =>
-              // newly idle: arm the TTL in watermark time
-              state.update(next)
-              state.setTimeoutTimestamp(
-                state.getCurrentWatermarkMs() + math.max(ttl / 1000L, 1L))
-            case None =>
-              // default: retain (doneSlot, empty) forever — the explicit
-              // bounded-key-domain contract
-              state.update(next)
-          }
-          rows.iterator.map(_.copy(key = key))
-      }
-  }
+      re: Encoder[HllWindowRow]): Dataset[HllWindowRow] =
+    EventTimeSlots[HllTick, HllState, HllWindowRow](
+      ds, _.key, bucketUs, watermarkDelay, dropIdleAfterUs,
+      HllState(None, Map.empty), _.open.keys,
+      (old, batch, wmUs) => step(old, batch, bucketUs, salt, wmUs),
+      (r, key) => r.copy(key = key))
 }

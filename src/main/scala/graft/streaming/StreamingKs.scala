@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder}
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** One observation for [[StreamingKs]]: stream key, event time, the
   * INTEGRAL pre-quantized value (the [[graft.operators.Quality.ksTest]]
@@ -27,8 +26,8 @@ final case class KsWindowRow(
   * "did the score distribution of side A diverge from side B THIS
   * window" (the binless two-sample drift alarm: treatment-vs-control
   * health, new-source-vs-corpus admission) — emitted the moment the
-  * window is watermark-FINAL (the [[StreamingAuc]]/[[StreamingAms]]
-  * finalization discipline, rows immutable, T7 exactly-once).
+  * window is watermark-FINAL (the [[EventTimeSlots]] lifecycle, rows
+  * immutable, exactly-once).
   *
   * Batch equivalence is THE correctness contract (spec-asserted): each
   * drained row equals `Quality.ksTest` over the same (key, slot) tick
@@ -40,8 +39,8 @@ final case class KsWindowRow(
   * Guards (fail-loud): per-window distinct values beyond `maxCells`
   * raise (re-quantize coarser); per-window side counts beyond 2³⁰ raise
   * before C₁·n₂ could wrap int64 (the [[StreamingAms]] bound
-  * discipline). Key population follows the [[StreamingHll]]
-  * dropIdleAfterUs contract verbatim. */
+  * discipline). Key population follows the [[EventTimeSlots]]
+  * `dropIdleAfterUs` contract. */
 object StreamingKs {
 
   private def rowOf(slot: Long, cells: Map[Long, (Long, Long)]): KsWindowRow = {
@@ -103,42 +102,11 @@ object StreamingKs {
       dropIdleAfterUs: Option[Long] = None)(
       implicit se: Encoder[KsState],
       re: Encoder[KsWindowRow]): Dataset[KsWindowRow] = {
-    require(bucketUs > 0, s"bucketUs $bucketUs must be positive")
     require(maxCells >= 1, s"maxCells $maxCells must be positive")
-    require(dropIdleAfterUs.forall(_ > 0L),
-      s"dropIdleAfterUs $dropIdleAfterUs must be positive when set")
-    import ds.sparkSession.implicits._
-    import org.apache.spark.sql.functions.{col, timestamp_micros}
-    val withTime = ds
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[KsTick]
-    withTime
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[KsState, KsWindowRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, ticks, state) =>
-          val old = state.getOption.getOrElse(KsState(None, Map.empty))
-          val wm = state.getCurrentWatermarkMs() * 1000L
-          val batch = ticks.toSeq
-          val (rows, next) = step(old, batch, bucketUs, wm, maxCells)
-          if (next.open.nonEmpty) {
-            state.update(next)
-            val s = next.open.keys.min
-            val armAt = ((s + 1) * bucketUs + 999L) / 1000L
-            state.setTimeoutTimestamp(
-              math.max(armAt, state.getCurrentWatermarkMs() + 1L))
-          } else dropIdleAfterUs match {
-            case Some(_) if state.hasTimedOut && batch.isEmpty && old.open.isEmpty =>
-              state.remove()
-            case Some(ttl) =>
-              state.update(next)
-              state.setTimeoutTimestamp(
-                state.getCurrentWatermarkMs() + math.max(ttl / 1000L, 1L))
-            case None =>
-              state.update(next)
-          }
-          rows.iterator.map(_.copy(key = key))
-      }
+    EventTimeSlots[KsTick, KsState, KsWindowRow](
+      ds, _.key, bucketUs, watermarkDelay, dropIdleAfterUs,
+      KsState(None, Map.empty), _.open.keys,
+      (old, batch, wmUs) => step(old, batch, bucketUs, wmUs, maxCells),
+      (r, key) => r.copy(key = key))
   }
 }

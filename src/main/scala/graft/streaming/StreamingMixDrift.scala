@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder}
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** One observation for [[StreamingMixDrift]]: stream key, event time,
   * and the categorical value whose MIX is being watched (lang, source,
@@ -48,10 +47,10 @@ final case class MixWindowRow(
   * readout, not a stopping rule; the peek-safe member is the batch
   * conformal/mSPRT tier.
   *
-  * Windows finalize in slot order (T7 discipline, late ticks drop);
-  * categories are bounded by `maxCategories` (fail-loud at ingest —
-  * the state bound IS the contract; an unbounded categorical belongs
-  * in [[StreamingHeavyHitters]]). */
+  * Windows finalize in slot order (the [[EventTimeSlots]] lifecycle,
+  * late ticks drop); categories are bounded by `maxCategories`
+  * (fail-loud at ingest — the state bound IS the contract; an unbounded
+  * categorical belongs in [[StreamingHeavyHitters]]). */
 object StreamingMixDrift {
 
   private def r6(x: Double) =
@@ -150,59 +149,24 @@ object StreamingMixDrift {
         s"> maxCategories $maxCategories")
     require(maxCategories >= 2 && maxCategories <= 65536,
       s"maxCategories $maxCategories outside [2, 65536]")
-    require(bucketUs > 0, s"bucketUs $bucketUs must be positive")
-    require(dropIdleAfterUs.forall(_ > 0L),
-      s"dropIdleAfterUs $dropIdleAfterUs must be positive when set")
-    import ds.sparkSession.implicits._
-    import org.apache.spark.sql.functions.{col, timestamp_micros}
-    val withTime = ds
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[MixTick]
-    withTime
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[MixState, MixWindowRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, ticks, state) =>
-          val old = state.getOption.getOrElse(MixState(None, Map.empty))
-          val wm = state.getCurrentWatermarkMs() * 1000L
-          val batch = ticks.toSeq
-          val (rows, next) =
-            step(old, batch, reference, maxCategories, bucketUs, wm)
-          if (next.open.nonEmpty) {
-            state.update(next)
-            val s = next.open.keys.min
-            val armAt = ((s + 1) * bucketUs + 999L) / 1000L
-            state.setTimeoutTimestamp(
-              math.max(armAt, state.getCurrentWatermarkMs() + 1L))
-          } else dropIdleAfterUs match {
-            case Some(_) if state.hasTimedOut && batch.isEmpty && old.open.isEmpty =>
-              state.remove()
-            case Some(ttl) =>
-              state.update(next)
-              state.setTimeoutTimestamp(
-                state.getCurrentWatermarkMs() + math.max(ttl / 1000L, 1L))
-            case None =>
-              state.update(next)
-          }
-          rows.iterator.map(_.copy(key = key))
-      }
+    EventTimeSlots[MixTick, MixState, MixWindowRow](
+      ds, _.key, bucketUs, watermarkDelay, dropIdleAfterUs,
+      MixState(None, Map.empty), _.open.keys,
+      (old, batch, wmUs) =>
+        step(old, batch, reference, maxCategories, bucketUs, wmUs),
+      (r, key) => r.copy(key = key))
   }
 
   /** Drive a BATCH tick frame through the live mix monitor and return
-    * the DRAINED window frame — the q280 drained-replay pattern on the
-    * SECOND streaming twin: one micro-batch feeds the ticks plus the
-    * ARMING far-future sentinel (first-batch watermark is -inf, nothing
-    * drops late, nothing closes), one APPLYING sentinel batch closes
-    * every (key, slot) window at once ([[DrainFeed]]'s two-batch
-    * minimum), and
-    * the result is the per-window chi-squared/JSD scoring of EXACT
-    * window counts against the fixed reference mix. Unlike the MG
-    * summary, the mix state is exact counts, so the drained frame is a
-    * pure function of the tick multiset at ANY capacity — the whole
-    * surface (windowing, watermark finalization, state, scoreOf
-    * arithmetic) replays as batch SQL: the registered q281 DuckDB gate.
-    * `maxDriveRows` caps the driven prefix exactly as in
+    * the DRAINED window frame ([[DrainFeed.replay]]) — the q280
+    * drained-replay pattern on the second streaming twin: the result is
+    * the per-window chi-squared/JSD scoring of EXACT window counts
+    * against the fixed reference mix. Unlike the MG summary, the mix
+    * state is exact counts, so the drained frame is a pure function of
+    * the tick multiset at ANY capacity — the whole surface (windowing,
+    * watermark finalization, state, scoreOf arithmetic) replays as batch
+    * SQL: the registered q281 DuckDB gate. `maxDriveRows` caps the
+    * driven prefix (first rows by (tsUs, key, cat)) exactly as in
     * [[StreamingHeavyHitters.drainedReplay]]. */
   def drainedReplay(
       ticks: org.apache.spark.sql.DataFrame,
@@ -217,28 +181,10 @@ object StreamingMixDrift {
       col("key").cast("string").as("key"),
       col("tsUs").cast("long").as("tsUs"),
       col("cat").cast("string").as("cat")).as[MixTick]
-    // one-scan drive collection (r19 optimization round): see
-    // [[StreamingHeavyHitters.drainedReplay]] — cap+1 rows in one pass,
-    // ordered-prefix job only when the cap is actually exceeded
-    // ADVICE r19: clamp before toIntExact — a caller-supplied "effectively
-    // unbounded" cap (> Int.MaxValue−1) must degrade to the biggest
-    // representable limit, not throw ArithmeticException / overflow
-    val capRows = math.toIntExact(math.min(maxDriveRows, Int.MaxValue - 1L))
-    val firstPass = typed.limit(capRows + 1).collect()
-    val collected =
-      if (firstPass.length <= maxDriveRows) firstPass
-      else typed.orderBy(col("tsUs"), col("key"), col("cat"))
-        .limit(capRows).collect()
-    val fed = collected.sortBy(t => (t.tsUs, t.key, t.cat)).toIndexedSeq
-    val sentinelKey = " drain"
-    val lastTs = if (fed.isEmpty) 0L else fed.last.tsUs
-    DrainFeed.run[MixTick, MixWindowRow](sp, fed,
-        Seq(MixTick(sentinelKey, lastTs + 2L * bucketUs, "x"),
-          MixTick(sentinelKey, lastTs + 4L * bucketUs, "x")),
-        ds => apply(ds, reference, bucketUs, watermarkDelay = "0 seconds",
-          maxCategories = maxCategories),
-        "mix_drain_",
-        distinctKeys = fed.iterator.map(_.key).toSet.size + 1)
-      .filter(col("key") =!= sentinelKey)
+    DrainFeed.replay[MixTick, MixWindowRow](typed, t => (t.tsUs, t.key, t.cat),
+        (k, ts) => MixTick(k, ts, "x"), bucketUs, maxDriveRows,
+        "mix_drain_")(
+      ds => apply(ds, reference, bucketUs, watermarkDelay = "0 seconds",
+        maxCategories = maxCategories))
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder}
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** One raw tick for [[StreamingResample]]: `seq` is the caller's
   * within-timestamp tiebreaker (an event id), making the per-slot
@@ -33,7 +32,7 @@ final case class ResampleRow(
   * Event-time semantics throughout: out-of-order ticks within the
   * watermark land in their true slot; a slot only emits when it can no
   * longer change, so every row is final (exactly-once with a
-  * checkpointed sink, the T7 contract).
+  * checkpointed sink; the [[EventTimeSlots]] lifecycle).
   *
   * Batch equivalence is THE correctness contract (spec-asserted): after
   * the stream drains and the watermark passes every observed slot, the
@@ -44,10 +43,10 @@ final case class ResampleRow(
   * pick, same LOCF.
   *
   * State per key: two scalars + the open-slot map (bounded by
-  * watermark-lag/step). The key POPULATION is unbounded state the
-  * caller owns, as with [[StreamingFunnel]]: keys are never evicted
-  * here because the LOCF carry is what a silent key resumes from —
-  * bounded key domains only.
+  * watermark-lag/step). No idle TTL: the key POPULATION is unbounded
+  * state the caller owns (the [[EventTimeSlots]] `None` contract), and
+  * keys are never evicted because the LOCF carry is what a silent key
+  * resumes from — bounded key domains only.
   */
 object StreamingResample {
 
@@ -102,34 +101,10 @@ object StreamingResample {
       implicit se: Encoder[ResampleState],
       re: Encoder[ResampleRow]): Dataset[ResampleRow] = {
     require(stepUs > 0, s"stepUs $stepUs must be positive")
-    import ds.sparkSession.implicits._
-    import org.apache.spark.sql.functions.{col, timestamp_micros}
-    val withTime = ds
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[ResampleTick]
-    withTime
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[ResampleState, ResampleRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, ticks, state) =>
-          val old = state.getOption.getOrElse(ResampleState(None, None, Map.empty))
-          val wm = state.getCurrentWatermarkMs() * 1000L
-          val (rows, next) = step(old, ticks.toSeq, stepUs, wm)
-          state.update(next)
-          // re-arm on the earliest still-open close boundary so empty
-          // batches keep draining as the watermark advances. CEIL the
-          // us→ms conversion and clamp past the watermark: a floor
-          // conversion of a non-ms-aligned slot end could land exactly
-          // ON the current watermark ms, and skipping the arm there
-          // would strand the key's pending slots forever if no further
-          // ticks arrive (Spark rejects a timeout at or before the
-          // watermark, so the clamp is the safe arm, never a skip)
-          next.pending.keys.minOption.foreach { s =>
-            val armAt = ((s + 1) * stepUs + 999L) / 1000L
-            state.setTimeoutTimestamp(math.max(armAt, state.getCurrentWatermarkMs() + 1L))
-          }
-          rows.iterator.map(_.copy(key = key))
-      }
+    EventTimeSlots[ResampleTick, ResampleState, ResampleRow](
+      ds, _.key, stepUs, watermarkDelay, None,
+      ResampleState(None, None, Map.empty), _.pending.keys,
+      (old, batch, wmUs) => step(old, batch, stepUs, wmUs),
+      (r, key) => r.copy(key = key))
   }
 }

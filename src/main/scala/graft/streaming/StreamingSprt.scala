@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder}
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** One observation for [[StreamingSprt]]: stream key (the experiment
   * variant, or `gate|variant` for segmented monitors), event time, and
@@ -44,10 +43,9 @@ final case class SprtWindowRow(
   * observation, but the inference is the latch.
   *
   * Windows finalize in slot order the moment the watermark passes them
-  * (the [[StreamingKs]]/[[StreamingConformal]] T7 discipline — rows
-  * immutable, late ticks for finalized slots drop); slots with no
-  * ticks emit nothing (the batch cells frame skips empty days too, so
-  * prefix equivalence is exact).
+  * (the [[EventTimeSlots]] lifecycle — rows immutable, late ticks for
+  * finalized slots drop); slots with no ticks emit nothing (the batch
+  * cells frame skips empty days too, so prefix equivalence is exact).
   *
   * Batch equivalence is spec-asserted: for every drained (key, slot)
   * row, running the batch operator over the tick prefix with
@@ -58,7 +56,7 @@ final case class SprtWindowRow(
   * the LLR is ONE fixed-order double chain per finalized slot off
   * exact longs — no accumulation of floats across slots.
   *
-  * `dropIdleAfterUs` follows the [[StreamingHll]] key-population TTL
+  * `dropIdleAfterUs` follows the [[EventTimeSlots]] key-population TTL
   * mechanically, with one SPRT-specific consequence stated loudly:
   * evicting an idle key forgets its cumulative counters AND its
   * decision latch — the test RESTARTS if that key ever ticks again.
@@ -122,44 +120,12 @@ object StreamingSprt {
       dropIdleAfterUs: Option[Long] = None)(
       implicit se: Encoder[SprtState],
       re: Encoder[SprtWindowRow]): Dataset[SprtWindowRow] = {
-    require(bucketUs > 0, s"bucketUs $bucketUs must be positive")
-    require(dropIdleAfterUs.forall(_ > 0L),
-      s"dropIdleAfterUs $dropIdleAfterUs must be positive when set")
     val (la, lb, ua, ub) =
       graft.operators.Experiment.sprtConstants(p0, p1, alpha, beta)
-    import ds.sparkSession.implicits._
-    import org.apache.spark.sql.functions.{col, timestamp_micros}
-    val withTime = ds
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[SprtTick]
-    withTime
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[SprtState, SprtWindowRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, ticks, state) =>
-          val old = state.getOption.getOrElse(
-            SprtState(None, Map.empty, 0L, 0L, None))
-          val wm = state.getCurrentWatermarkMs() * 1000L
-          val batch = ticks.toSeq
-          val (rows, next) = step(old, batch, bucketUs, wm, la, lb, ua, ub)
-          if (next.open.nonEmpty) {
-            state.update(next)
-            val s = next.open.keys.min
-            val armAt = ((s + 1) * bucketUs + 999L) / 1000L
-            state.setTimeoutTimestamp(
-              math.max(armAt, state.getCurrentWatermarkMs() + 1L))
-          } else dropIdleAfterUs match {
-            case Some(_) if state.hasTimedOut && batch.isEmpty && old.open.isEmpty =>
-              state.remove()
-            case Some(ttl) =>
-              state.update(next)
-              state.setTimeoutTimestamp(
-                state.getCurrentWatermarkMs() + math.max(ttl / 1000L, 1L))
-            case None =>
-              state.update(next)
-          }
-          rows.iterator.map(_.copy(key = key))
-      }
+    EventTimeSlots[SprtTick, SprtState, SprtWindowRow](
+      ds, _.key, bucketUs, watermarkDelay, dropIdleAfterUs,
+      SprtState(None, Map.empty, 0L, 0L, None), _.open.keys,
+      (old, batch, wmUs) => step(old, batch, bucketUs, wmUs, la, lb, ua, ub),
+      (r, key) => r.copy(key = key))
   }
 }
