@@ -2,58 +2,76 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 
-/** Shared MemoryStream drive for the drained-replay oracles (q280/q281
-  * — the q279 witness pattern applied to streaming surfaces): feed the
-  * caller's rows PLUS the first (arming) sentinel as ONE micro-batch —
-  * the first batch's watermark is −inf, so nothing can drop late, and
-  * the arming sentinel only raises the NEXT batch's watermark (the
-  * watermark a batch closes against is the PREVIOUS batch's maximum) —
-  * then each remaining sentinel in its own batch: the second far-future
-  * sentinel's batch closes against watermark = the arming sentinel's
-  * timestamp, finalizing every real (key, slot) window at once (state
-  * timeouts fire even for keys with no new rows). Blocks until the sink
-  * drains and returns the accumulated memory table.
+/** The MemoryStream drive behind the drained-replay oracles (q280 and
+  * q281, the q279 witness pattern applied to streaming surfaces). It
+  * runs in exactly two micro-batches:
   *
-  * r19 optimization round: this was previously a 3-batch drive (fed,
-  * arm, apply). Folding the arming sentinel into the fed batch removes
-  * one full micro-batch (plan + state-store open/commit on every state
-  * partition + offset/commit log writes) with a BIT-IDENTICAL drained
-  * frame: the per-key tick multiset per batch is unchanged for every
-  * real key (the sentinel rides its own key), and the drained output of
-  * both replay surfaces is a pure function of that multiset — emission
-  * merely moves one batch earlier. Second lever: `distinctKeys` sizes
-  * the streaming aggregation's state partitions to the DRIVEN key count
-  * (+1 sentinel) instead of the session default — with K keys at most K
-  * state partitions ever hold rows, and every extra partition pays
-  * store-open/commit/delta-file I/O per batch for nothing. This is
-  * data-derived (the caller counts keys in the fed rows), not a
-  * local-mode constant: a production drive with thousands of keys keeps
-  * the session's partitioning. The session conf is restored right after
-  * `start()` — a streaming query clones the session state at start, so
-  * the scoped setting cannot leak to the caller. */
+  *  1. the caller's rows plus one arming sentinel at
+  *     `lastTs + 2·bucketUs`, on a key of its own. The first batch's
+  *     watermark is −inf, so nothing drops late and nothing closes; the
+  *     sentinel only raises the watermark the next batch runs at (a
+  *     batch closes against the previous batch's maximum event time).
+  *  2. Spark's no-data batch at that watermark. Every real `(key, slot)`
+  *     ends at or before `lastTs + bucketUs`, so each key's event-time
+  *     timer fires and finalizes all of its windows at once, even for
+  *     keys with no rows in the batch. `processAllAvailable` waits for
+  *     this batch.
+  *
+  * The sentinel's own slot stays open, so no third batch runs. The
+  * drained frame is a pure function of the per-key tick multiset.
+  *
+  * Three settings are scoped to the replay's query: set before
+  * `start()`, restored right after (a started query clones the session
+  * conf, so they never reach the caller):
+  *  - `spark.sql.shuffle.partitions` is sized to the driven key count
+  *    (+1 sentinel). With K keys at most K state partitions hold rows,
+  *    and every extra one pays a state-store open, commit and delta file
+  *    per batch for nothing. A drive with more keys than the session's
+  *    partitions keeps the session's value.
+  *  - `spark.sql.streaming.noDataMicroBatches.enabled=true`: batch 2 is
+  *    a no-data batch, so a caller session that turned them off would
+  *    strand every window.
+  *  - `spark.sql.streaming.checkpointFileManagerClass` names Hadoop's
+  *    `FileSystem`-based manager for the offset log, the commit log and
+  *    the state store. Spark's default goes through the local
+  *    `FileContext`, which without the native Hadoop library forks
+  *    `readlink` and `chmod` processes for every checkpoint file. The
+  *    replay checkpoints into Spark's temporary local directory, where a
+  *    rename is atomic, and the checksummed local file system still
+  *    writes the `.crc` files.
+  *
+  * The set/restore window is not safe against a concurrent query build
+  * on the same session: every caller builds one query at a time.
+  * Production streams that take a caller's checkpoint (`ParquetSink`,
+  * `StreamCombine`) keep Spark's default manager. */
 private[streaming] object DrainFeed {
 
-  /** One `addData` block's row bound (r19 verdict item 6): the drive
-    * previously concatenated the WHOLE tick array into one call —
-    * `fed ++ arm` copies it, and MemoryStream encodes it as one block —
-    * an unbounded single driver copy at 100× scale. Chunking bounds the
-    * per-call copy; the chunks are added BEFORE the query starts, so
-    * they still land in the FIRST micro-batch (a MemoryStream batch
-    * spans every offset available at batch-planning time — a started
-    * query could instead cut a batch boundary between two chunks,
-    * changing the watermark the replay's semantics pin). */
+  /** One `addData` block's row bound: it bounds the driver copy that
+    * MemoryStream encodes per call. Every chunk is added before the
+    * query starts, so all of them still land in the first micro-batch
+    * (a MemoryStream batch spans every offset available when the batch
+    * is planned; a started query could cut a batch between two chunks
+    * and change the watermark the replay pins). */
   private val FeedChunkRows = 65536
 
-  /** The key the replay sentinels ride on; filtered out of the result. */
+  /** The key the replay sentinel rides on; filtered out of the result. */
   private val SentinelKey = " drain"
+
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+  private val NoDataBatches = "spark.sql.streaming.noDataMicroBatches.enabled"
+  private val CheckpointManager = "spark.sql.streaming.checkpointFileManagerClass"
+  private val FileSystemManager =
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
 
   /** Replay a BATCH tick frame through a live monitor and return its
     * drained window frame: collect at most `maxDriveRows` ticks in one
     * scan (`limit(cap + 1)`; only when the cap is exceeded, a second job
     * takes the first `cap` rows in drive order), sort them on the driver
-    * in drive order, and [[run]] them with two far-future sentinels at
-    * `lastTs + 2·bucketUs` (arming) and `lastTs + 4·bucketUs` (applying)
-    * on a key of their own, which is dropped from the result.
+    * in drive order, and [[run]] them with the arming sentinel at
+    * `lastTs + 2·bucketUs` on a key of its own, which is dropped from
+    * the result. The replay takes two micro-batches: the fed rows with
+    * the sentinel, then Spark's no-data batch at the sentinel's
+    * watermark, which finalizes every window.
     *
     * `typed` has the columns `key`, `tsUs` and one value column;
     * `order` gives a tick's drive order `(tsUs, key, value)`, and
@@ -77,9 +95,7 @@ private[streaming] object DrainFeed {
         .limit(capRows).collect()
     val fed = collected.sortBy(order).toIndexedSeq
     val lastTs = if (fed.isEmpty) 0L else order(fed.last)._1
-    run[T, R](typed.sparkSession, fed,
-        Seq(sentinel(SentinelKey, lastTs + 2L * bucketUs),
-          sentinel(SentinelKey, lastTs + 4L * bucketUs)),
+    run[T, R](typed.sparkSession, fed, sentinel(SentinelKey, lastTs + 2L * bucketUs),
         build, sinkPrefix,
         distinctKeys = fed.iterator.map(order(_)._2).toSet.size + 1)
       .filter(col("key") =!= SentinelKey)
@@ -88,50 +104,48 @@ private[streaming] object DrainFeed {
   private def run[T, R: Encoder](
       spark: SparkSession,
       fed: IndexedSeq[T],
-      sentinels: Seq[T],
+      arm: T,
       build: Dataset[T] => Dataset[R],
       sinkPrefix: String,
       distinctKeys: Int)(implicit enc: Encoder[T]): DataFrame = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val ms = MemoryStream[T](spark)
     val sink = sinkPrefix + java.util.UUID.randomUUID().toString.replace("-", "")
-    // batch 1: fed rows + the arming sentinel (watermark −inf, nothing
-    // closes, nothing drops) — everything added before start() is one
-    // micro-batch; batches 2..: the applying sentinel(s), each closing
-    // against the previous batch's maximum event time
-    val (arm, rest) =
-      if (fed.nonEmpty && sentinels.nonEmpty) (Seq(sentinels.head), sentinels.tail)
-      else (Seq.empty[T], sentinels)
     fed.grouped(FeedChunkRows).foreach(c => ms.addData(c))
-    if (arm.nonEmpty) ms.addData(arm)
-    // The session-global conf mutation below is NOT concurrency-safe:
-    // two concurrent drained replays (or any query build racing this
-    // set/restore window) could observe the scoped value. Every caller
-    // is a single-threaded query build (bench/verify/oracle drive one
-    // query at a time) — the single-caller assumption is the contract.
-    val confKey = "spark.sql.shuffle.partitions"
-    val prevParts = spark.conf.get(confKey)
-    val scopedParts =
-      math.max(1, math.min(prevParts.toInt, math.max(distinctKeys, 1)))
-    spark.conf.set(confKey, scopedParts.toString)
-    val q =
-      try build(ms.toDS()).writeStream.outputMode("append")
-        .format("memory").queryName(sink).start()
-      finally spark.conf.set(confKey, prevParts)
+    ms.addData(Seq(arm))
+    val scopedParts = math.max(1,
+      math.min(spark.conf.get(ShufflePartitions).toInt, distinctKeys))
+    // the memory sink registers its temp view at start(); drop it however
+    // the drive ends, or it keeps the (partial) rows for the session's life
     try {
-      if (fed.nonEmpty || arm.nonEmpty) q.processAllAvailable()
-      rest.foreach { s => ms.addData(s); q.processAllAvailable() }
-    } finally q.stop()
-    // Materialize the drained frame (model-sized: one row per finalized
-    // (key, window) emission — it already lives in driver memory inside
-    // the memory sink) and DROP the sink view: without this every replay
-    // leaks a UUID-named temp view holding its full result for the
-    // session lifetime — catalog.clearCache() between bench queries does
-    // not remove temp views, so a dev loop accumulates them.
-    val drained = spark.table(sink)
-    val rows = drained.collectAsList()
-    val schema = drained.schema
-    spark.catalog.dropTempView(sink)
-    spark.createDataFrame(rows, schema)
+      val q = withScopedConf(spark, Seq(
+          ShufflePartitions -> scopedParts.toString,
+          NoDataBatches -> "true",
+          CheckpointManager -> FileSystemManager)) {
+        build(ms.toDS()).writeStream.outputMode("append")
+          .format("memory").queryName(sink).start()
+      }
+      try q.processAllAvailable() finally q.stop()
+      // one row per finalized (key, window) emission: it already lives in
+      // driver memory inside the memory sink
+      val drained = spark.table(sink)
+      spark.createDataFrame(drained.collectAsList(), drained.schema)
+    } finally spark.catalog.dropTempView(sink)
+  }
+
+  /** Run `body` with `confs` set on the session, then restore each key as
+    * it was: its previous value, or unset if the session did not set it
+    * (`getAll` holds only the keys a session sets; `getOption` would read
+    * a key's default back as if it were set). */
+  private def withScopedConf[A](spark: SparkSession, confs: Seq[(String, String)])(
+      body: => A): A = {
+    val set = spark.conf.getAll
+    val prev = confs.map { case (k, _) => k -> set.get(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 }

@@ -1,13 +1,27 @@
 package graft.streaming
 
+import java.util.UUID
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
 import graft.SparkSpecBase
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener._
 
 /** [[DrainFeed.replay]] — the drained-replay drive behind q280/q281:
-  * the sentinel key never reaches the result, and a `maxDriveRows` cap
-  * drives exactly the first rows in (tsUs, key, value) order. */
+  * the sentinel key never reaches the result, a `maxDriveRows` cap
+  * drives exactly the first rows in (tsUs, key, value) order, the drive
+  * takes two micro-batches, its scoped settings never reach the caller's
+  * session, and its memory-sink view is dropped even when the stream
+  * fails. */
 class DrainFeedSpec extends SparkSpecBase {
 
   private val Bucket = 1000000L
+
+  private val ScopedKeys = Seq(
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.noDataMicroBatches.enabled",
+    "spark.sql.streaming.checkpointFileManagerClass")
 
   private def ticks = {
     val s = spark
@@ -21,8 +35,38 @@ class DrainFeedSpec extends SparkSpecBase {
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
 
+  private def drained = rows(StreamingHeavyHitters.drainedReplay(ticks, capacity = 64, bucketUs = Bucket))
+
+  /** Progress events of the one query named `prefix*` that `body` runs,
+    * counted once it has terminated (the listener bus delivers a query's
+    * events in order, termination last). */
+  private def progressEvents(prefix: String)(body: => Unit): Int = {
+    val batches = new AtomicInteger
+    val started = ConcurrentHashMap.newKeySet[UUID]()
+    val terminated = new CountDownLatch(1)
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        if (Option(e.name).exists(_.startsWith(prefix))) started.add(e.id)
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (Option(e.progress.name).exists(_.startsWith(prefix))) batches.incrementAndGet()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (started.contains(e.id)) terminated.countDown()
+    }
+    spark.streams.addListener(listener)
+    try {
+      body
+      assert(terminated.await(60, TimeUnit.SECONDS), "the replay query never terminated")
+      assert(started.size === 1)
+    } finally spark.streams.removeListener(listener)
+    batches.get
+  }
+
+  /** Each scoped key: whether the session sets it, and the value it reads. */
+  private def scopedConf =
+    ScopedKeys.map(k => (k, spark.conf.getAll.contains(k), spark.conf.getOption(k)))
+
   test("uncapped replay drains every window and drops the sentinel key") {
-    val got = rows(StreamingHeavyHitters.drainedReplay(ticks, capacity = 64, bucketUs = Bucket))
+    val got = drained
     assert(got.nonEmpty && got.forall(r => r.head.toString.startsWith("k")))
     val n = ticks.groupBy("key").count().collect().map(_.getLong(1)).sum
     // exact windows: the per-window n_window sums over (key, slot) to the tick count
@@ -42,5 +86,47 @@ class DrainFeedSpec extends SparkSpecBase {
     val expected = StreamingHeavyHitters.drainedReplay(prefix, capacity = 64,
       bucketUs = Bucket)
     assert(rows(capped) === rows(expected))
+  }
+
+  test("the replay drains in two micro-batches: the fed rows with the sentinel, then the no-data batch") {
+    var got = Seq.empty[Seq[Any]]
+    val batches = progressEvents("hh_drain_") { got = drained }
+    assert(got.nonEmpty)
+    assert(batches === 2)
+  }
+
+  test("the replay's settings are scoped to its query, whatever the caller's session sets") {
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val expected = drained
+    val wasSet = spark.conf.getAll.get(noData)
+    spark.conf.set(noData, "false")
+    try {
+      val before = scopedConf
+      assert(rows(StreamingHeavyHitters.drainedReplay(ticks, capacity = 64,
+        bucketUs = Bucket)) === expected)
+      assert(scopedConf === before)
+      assert(spark.conf.getOption(noData) === Some("false"))
+      assert(!spark.conf.getAll.contains("spark.sql.streaming.checkpointFileManagerClass"))
+    } finally wasSet match {
+      case Some(v) => spark.conf.set(noData, v)
+      case None => spark.conf.unset(noData)
+    }
+  }
+
+  test("a failing stream drops its memory-sink view and restores the settings") {
+    val s = spark
+    import s.implicits._
+    val typed = ticks.as[HhTick]
+    val before = scopedConf
+    intercept[Exception] {
+      DrainFeed.replay[HhTick, HhWindowRow](typed, t => (t.tsUs, t.key, t.item),
+          (k, ts) => HhTick(k, ts, "x"), Bucket, 1000000L, "hh_fail_") { ds =>
+        StreamingHeavyHitters(
+          ds.filter(t => if (t.key == "k3") sys.error("injected tick failure") else true),
+          capacity = 64, bucketUs = Bucket, watermarkDelay = "0 seconds")
+      }.collect()
+    }
+    assert(!spark.catalog.listTables().collect().exists(_.name.startsWith("hh_fail_")))
+    assert(scopedConf === before)
   }
 }
