@@ -1,8 +1,9 @@
 package graft.operators
 
 import graft.functions.TextOps
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Distributed BPE tokenizer TRAINING — merge-rule induction (Sennrich,
@@ -17,24 +18,58 @@ import org.apache.spark.storage.StorageLevel
   *     after runs on the vocabulary (≪ corpus: ~10⁷ distinct words for a
   *     web-scale crawl), which is also why weighting by word count is not
   *     an approximation — it IS the corpus pair count.
-  *  2. per merge round: adjacent-pair counts over the vocab (one small
-  *     aggregation), a TakeOrdered(1) argmax to the driver (the only
-  *     driver traffic: ONE row per round), and a narrow fold that applies
-  *     the merge to each word's symbol array.
-  * Rounds are lineage-truncated like the connected-components loop
-  * (eager DISK_ONLY localCheckpoint per round, prior round's blocks
-  * released) — numMerges can reach vocabulary scale without the logical
-  * plan growing per round.
+  *  2. per merge round: adjacent-pair counts over the vocab, an argmax,
+  *     and a greedy merge applied to each word's symbol array — on the
+  *     driver for a model-sized vocabulary, as Spark rounds above the
+  *     driver caps.
   *
-  * Determinism: the argmax orders by (count DESC, left ASC, right ASC) —
-  * a total order over pairs, so the merge table is a pure function of the
-  * corpus, at any parallelism.
+  * The merge loop is a [[MergeScheme]]'s pair-merge trainer, shared with
+  * [[WordPieceTrain]]: BPE is the scheme with no continuation marker and
+  * the frequency objective.
   */
 object BpeTrain {
 
   /** One learned rule: at `rank` (0-based), adjacent (`left`, `right`)
     * symbols — `count` weighted occurrences at learn time — fuse. */
   final case class Merge(rank: Int, left: String, right: String, count: Long)
+
+  /** The greedy adjacent-pair merge trainer's scheme: the two facts that
+    * tell BPE and WordPiece apart. Every layer of the trainer — the
+    * driver loop, the distributed loop and the oracle SQL — is written
+    * once against it.
+    *
+    *  - `marker`, the continuation marker ("" for BPE, "##" for
+    *    WordPiece): every non-initial seed symbol carries it, and a merge
+    *    fuses (l, r) into `l + r.stripPrefix(marker)`, so a fused piece
+    *    keeps its left part's position class.
+    *  - `likelihood`, the pair objective. Frequency scores a pair by its
+    *    weighted count `cnt`; likelihood by the exact integer
+    *    `(cnt · 10¹²) div (c_l · c_r)` over the weighted symbol counts —
+    *    BigInt on the driver, DECIMAL(38,0) `div` in Spark, HUGEINT `//`
+    *    in the SQL, the same truncating division on these positive
+    *    operands. Exact, so two pairs whose rational scores agree to 12
+    *    digits fall to the tiebreak identically everywhere; bounded, as
+    *    score ≤ 10¹² (c_l, c_r ≥ cnt) and the products stay ≤ 10²⁶ ≪ the
+    *    DECIMAL(38) / int128 range even at 10¹³-token corpora.
+    *
+    * Each round merges the argmax over the pairs with
+    * `cnt ≥ minPairCount` under the total order (score DESC, cnt DESC,
+    * l, r), symbols compared in the engine's binary UTF-8 order; a round
+    * with no such pair ends training. The order is total, so the merge
+    * table is a pure function of the corpus at any parallelism. Under
+    * frequency score = cnt: BPE's (count DESC, l, r) order and its
+    * noise-floor stop. */
+  private[operators] final case class MergeScheme(marker: String, likelihood: Boolean)
+
+  private[operators] val Scheme = MergeScheme("", likelihood = false)
+
+  /** A rule as the shared trainer learns it; `score` equals `count`
+    * under the frequency objective. */
+  private[operators] final case class PairMerge(
+      rank: Int, left: String, right: String, count: Long, score: Long)
+
+  /** The likelihood score's quantization: 12 digits of relative precision. */
+  private val ScoreScale = "1000000000000" // 10^12
 
   /** Word vocabulary with occurrence weights — the corpus→vocab
     * reduction (step 1 above). `explode_outer` + null-filter on the
@@ -53,6 +88,11 @@ object BpeTrain {
     * `word.map(_.toString)` keeps the char. */
   def charSyms(word: Column): Column =
     regexp_extract_all(word, lit("(?s)."), lit(0))
+
+  /** A scheme's seed symbols: [[charSyms]] with every non-initial code
+    * point `marker`-prefixed. */
+  private[operators] def seedSyms(word: Column, marker: String): Column =
+    transform(charSyms(word), (c, i) => when(i === 0, c).otherwise(concat(lit(marker), c)))
 
   /** Adjacent symbol-pair counts over a (`syms`, `w`) vocabulary,
     * weighted by word occurrence — columns (l, r, cnt). */
@@ -81,16 +121,26 @@ object BpeTrain {
     * rounds 2..n — with per-round literals each round generated and
     * JIT-compiled a fresh class, which dominated small-vocab round time. */
   def mergeExpr(syms: Column, left: Column, right: Column): Column =
+    fuseExpr(syms, left, right, Scheme.marker)
+
+  def mergeExpr(syms: Column, left: String, right: String): Column =
+    mergeExpr(syms, lit(left), lit(right))
+
+  /** [[mergeExpr]] under a scheme's fuse rule: left + right stripped of
+    * `marker`. The strip is conditional — a right element without the
+    * marker (a malformed row) degrades to plain concat, not a mangle. */
+  private[operators] def fuseExpr(syms: Column, left: Column, right: Column,
+      marker: String): Column = {
+    val fused = concat(left, when(right.startsWith(marker),
+      right.substr(lit(marker.length + 1), length(right))).otherwise(right))
     aggregate(
       syms,
       array().cast("array<string>"),
       (acc, s) =>
         when(size(acc) > 0 && element_at(acc, -1) === left && s === right,
-          concat(slice(acc, lit(1), size(acc) - 1), array(concat(left, right))))
+          concat(slice(acc, lit(1), size(acc) - 1), array(fused)))
           .otherwise(concat(acc, array(s))))
-
-  def mergeExpr(syms: Column, left: String, right: String): Column =
-    mergeExpr(syms, lit(left), lit(right))
+  }
 
   /** Learn up to `numMerges` merge rules from the corpus. Stops early
     * when the best remaining pair's weighted count drops below
@@ -102,6 +152,15 @@ object BpeTrain {
       minPairCount: Long = 2L): Seq[Merge] =
     trainMergesFromVocab(wordVocab(docs, textCol), numMerges, minPairCount)
 
+  /** Same, from a prepared (`word`, `w`) vocabulary — lets callers train
+    * several tokenizers (per language, per domain) off one corpus pass. */
+  def trainMergesFromVocab(
+      wordWeights: DataFrame,
+      numMerges: Int,
+      minPairCount: Long = 2L): Seq[Merge] =
+    trainVocab(wordWeights, numMerges, minPairCount, Scheme)
+      .map(m => Merge(m.rank, m.left, m.right, m.count))
+
   /** Lineage-truncate every this-many merge rounds. Between checkpoints
     * rounds only PERSIST: unlike the CC loop (which references each
     * round's frame twice, doubling the plan per round), a merge round
@@ -112,20 +171,18 @@ object BpeTrain {
     * without analyzer-stack or treeString blowup. */
   private val CheckpointEvery = 8
 
-  /** Execution-strategy gate for the merge loop (r19 verdict item 4, the
-    * mmrSelect §5 move): the vocabulary after the one corpus pass is
-    * MODEL-SIZED, and every merge round over it is otherwise a full
-    * driver-coordinated Spark job (plan + schedule + collect) whose fixed
-    * cost dwarfs the vocab-sized work — 16 rounds ≈ 33 jobs for q78. At
-    * or below these caps the vocab is collected once and the whole loop
-    * runs driver-side; above them the distributed loop below is the path
-    * (a 100 TB crawl's ~10⁸-word vocab stays out of driver memory). BOTH
-    * branches compute the identical merge table — same weighted pair
-    * counts, same (count DESC, left, right) argmax under the engine's
-    * binary string order, same greedy non-overlapping fold —
-    * spec-asserted across the threshold (BpeTrainSpec/WordPieceTrainSpec
-    * force each branch on the same vocab), unlike the result-degrading
-    * guard class (boundedProbeBudget) this must not be confused with. */
+  /** Execution-strategy gate for the merge loop: the vocabulary after
+    * the one corpus pass is MODEL-SIZED, and every merge round over it
+    * is otherwise a full driver-coordinated Spark job (plan + schedule +
+    * collect) whose fixed cost dwarfs the vocab-sized work — 16 rounds
+    * ≈ 33 jobs for q78. At or below these caps the vocab is collected
+    * once and the whole loop runs driver-side; above them the
+    * distributed loop is the path (a 100 TB crawl's ~10⁸-word vocab
+    * stays out of driver memory). BOTH branches compute the identical
+    * merge table — spec-asserted across the threshold (BpeTrainSpec and
+    * WordPieceTrainSpec force each branch on the same vocab), unlike the
+    * result-degrading guard class (boundedProbeBudget) this must not be
+    * confused with. */
   private[operators] val DriverVocabMaxWords: Int = 1 << 20
   private[operators] val DriverVocabMaxChars: Long = 1L << 26
 
@@ -136,7 +193,7 @@ object BpeTrain {
     * cap bounds the per-round rescan cost and is checked post-collect
     * (rows are words — kilobyte "words" would take a degenerate
     * pre-tokenizer, but the loop must not be quadratic-ish on one). */
-  private[operators] def collectVocabIfSmall(
+  private def collectVocabIfSmall(
       wordWeights: DataFrame): Option[Array[(String, Long)]] = {
     val rows = wordWeights
       .select(col("word").cast("string"), col("w").cast("long"))
@@ -149,6 +206,23 @@ object BpeTrain {
       }
       val chars = vocab.iterator.map(_._1.length.toLong).sum
       if (chars <= DriverVocabMaxChars) Some(vocab) else None
+    }
+  }
+
+  /** The shared trainer's entry: model-sized vocabularies (at most
+    * [[DriverVocabMaxWords]] words and [[DriverVocabMaxChars]] chars)
+    * run the loop driver-side after one collect, larger ones keep the
+    * distributed rounds. */
+  private[operators] def trainVocab(
+      wordWeights: DataFrame,
+      numMerges: Int,
+      minPairCount: Long,
+      scheme: MergeScheme): Seq[PairMerge] = {
+    require(numMerges >= 0, s"numMerges $numMerges must be >= 0")
+    require(minPairCount >= 1L, s"minPairCount $minPairCount must be >= 1")
+    collectVocabIfSmall(wordWeights) match {
+      case Some(vocab) => trainMergesDriver(vocab, numMerges, minPairCount, scheme)
+      case None => trainMergesDistributed(wordWeights, numMerges, minPairCount, scheme)
     }
   }
 
@@ -173,16 +247,19 @@ object BpeTrain {
   }
 
   /** The merge loop, driver-side, on a collected vocabulary — the same
-    * rounds as the distributed loop below, job-free: weighted adjacent
-    * pair counts (ints interned per symbol, pairs packed into one long),
-    * (count DESC, left, right) argmax under [[utf8Compare]], greedy
-    * non-overlapping left-to-right replace ([[applyMerge]]'s semantics,
-    * in place). Spec-gated equal to the distributed loop and to
-    * BpeTrainSpec's independent sequential reference. */
-  private[graft] def trainMergesDriver(
+    * rounds as the distributed loop, job-free: symbols interned to ints,
+    * adjacent pairs packed into one long, the scheme's argmax with ties
+    * on the symbol STRINGS under [[utf8Compare]] (never on interning-order
+    * ids), then the greedy non-overlapping left-to-right replace
+    * ([[applyMerge]]'s semantics) in place. Spec-gated equal to the
+    * distributed loop and to each spec's independent sequential
+    * reference. */
+  private[operators] def trainMergesDriver(
       vocab: Array[(String, Long)],
       numMerges: Int,
-      minPairCount: Long): Seq[Merge] = {
+      minPairCount: Long,
+      scheme: MergeScheme): Seq[PairMerge] = {
+    val scoreScale = BigInt(ScoreScale)
     val symIdx = new java.util.HashMap[String, Integer]
     val symStr = scala.collection.mutable.ArrayBuffer.empty[String]
     def sid(s: String): Int = {
@@ -190,50 +267,68 @@ object BpeTrain {
       if (e != null) e.intValue
       else { symIdx.put(s, symStr.size); symStr += s; symStr.size - 1 }
     }
-    val words = vocab.map { case (w, _) => codePointSyms(w).iterator.map(sid(_)).toArray }
+    def left(k: Long): Int = (k >>> 32).toInt
+    def right(k: Long): Int = (k & 0xffffffffL).toInt
+    val words = vocab.map { case (w, _) =>
+      codePointSyms(w).iterator.zipWithIndex
+        .map { case (c, i) => sid(if (i == 0) c else scheme.marker + c) }.toArray
+    }
     val weights = vocab.map(_._2)
-    val merges = Seq.newBuilder[Merge]
+    val merges = Seq.newBuilder[PairMerge]
     var rank = 0
     var exhausted = false
     while (rank < numMerges && !exhausted) {
       val cnt = new java.util.HashMap[java.lang.Long, java.lang.Long]()
+      val symCnt =
+        if (scheme.likelihood) new java.util.HashMap[Integer, java.lang.Long]() else null
       var i = 0
       while (i < words.length) {
         val a = words(i)
         val w = weights(i)
         var j = 0
-        while (j < a.length - 1) {
-          val k = (a(j).toLong << 32) | (a(j + 1).toLong & 0xffffffffL)
-          cnt.merge(k, w, (x, y) => x + y)
+        while (j < a.length) {
+          if (symCnt != null) symCnt.merge(a(j), w, (x, y) => x + y)
+          if (j < a.length - 1)
+            cnt.merge((a(j).toLong << 32) | (a(j + 1).toLong & 0xffffffffL),
+              w, (x, y) => x + y)
           j += 1
         }
         i += 1
       }
-      // argmax (cnt DESC, l, r) — ties resolved on the symbol STRINGS in
-      // the engine's order, never on interning-order ids
       var bestK = -1L
-      var bestC = Long.MinValue
+      var bestC = 0L
+      var bestS = Long.MinValue
       val it = cnt.entrySet().iterator()
       while (it.hasNext) {
         val e = it.next()
-        val k = e.getKey.longValue
         val c = e.getValue.longValue
-        if (c > bestC) { bestC = c; bestK = k }
-        else if (c == bestC && bestK >= 0L) {
-          val cl = utf8Compare(symStr((k >>> 32).toInt), symStr((bestK >>> 32).toInt))
-          if (cl < 0 || (cl == 0 &&
-              utf8Compare(symStr((k & 0xffffffffL).toInt),
-                symStr((bestK & 0xffffffffL).toInt)) < 0)) bestK = k
+        if (c >= minPairCount) {
+          val k = e.getKey.longValue
+          val s =
+            if (symCnt == null) c
+            else ((BigInt(c) * scoreScale) /
+              (BigInt(symCnt.get(Integer.valueOf(left(k))).longValue) *
+                BigInt(symCnt.get(Integer.valueOf(right(k))).longValue))).toLong
+          val better =
+            if (s != bestS) s > bestS
+            else if (c != bestC) c > bestC
+            else if (bestK < 0L) true
+            else {
+              val lc = utf8Compare(symStr(left(k)), symStr(left(bestK)))
+              lc < 0 || (lc == 0 &&
+                utf8Compare(symStr(right(k)), symStr(right(bestK))) < 0)
+            }
+          if (better) { bestK = k; bestC = c; bestS = s }
         }
       }
-      if (bestK < 0L || bestC < minPairCount) exhausted = true
+      if (bestK < 0L) exhausted = true
       else {
-        val li = (bestK >>> 32).toInt
-        val ri = (bestK & 0xffffffffL).toInt
+        val li = left(bestK)
+        val ri = right(bestK)
         val l = symStr(li)
         val r = symStr(ri)
-        merges += Merge(rank, l, r, bestC)
-        val ni = sid(l + r)
+        merges += PairMerge(rank, l, r, bestC, bestS)
+        val ni = sid(l + r.stripPrefix(scheme.marker))
         var i2 = 0
         while (i2 < words.length) {
           val a = words(i2)
@@ -258,32 +353,22 @@ object BpeTrain {
     merges.result()
   }
 
-  /** Same, from a prepared (`word`, `w`) vocabulary — lets callers train
-    * several tokenizers (per language, per domain) off one corpus pass.
-    * Model-sized vocabularies (≤ [[DriverVocabMaxWords]] words and
-    * [[DriverVocabMaxChars]] chars) run the loop driver-side in one
-    * collect; larger ones keep the distributed rounds. */
-  def trainMergesFromVocab(
-      wordWeights: DataFrame,
-      numMerges: Int,
-      minPairCount: Long = 2L): Seq[Merge] = {
-    require(numMerges >= 0, s"numMerges $numMerges must be >= 0")
-    require(minPairCount >= 1L, s"minPairCount $minPairCount must be >= 1")
-    collectVocabIfSmall(wordWeights) match {
-      case Some(vocab) => trainMergesDriver(vocab, numMerges, minPairCount)
-      case None => trainMergesDistributed(wordWeights, numMerges, minPairCount)
-    }
-  }
-
   /** The distributed merge loop — the path for vocabularies past the
-    * driver caps (nothing above ever holds the vocab in one place). */
-  private[graft] def trainMergesDistributed(
+    * driver caps (nothing here ever holds the vocab in one place). Per
+    * round: pair counts (plus, under likelihood, symbol counts —
+    * alphabet-sized, so broadcast-joined onto the pairs), a
+    * TakeOrdered(1) argmax whose per-partition heads meet at the driver
+    * (one row of traffic, no full sort), and the [[fuseExpr]] fold.
+    * Rounds persist between [[CheckpointEvery]]-spaced checkpoints, and
+    * every working frame is released on any exit path. */
+  private[operators] def trainMergesDistributed(
       wordWeights: DataFrame,
       numMerges: Int,
-      minPairCount: Long = 2L): Seq[Merge] = {
-    val merges = Seq.newBuilder[Merge]
+      minPairCount: Long,
+      scheme: MergeScheme): Seq[PairMerge] = {
+    val merges = Seq.newBuilder[PairMerge]
     var vocab = wordWeights
-      .select(charSyms(col("word")).as("syms"), col("w"))
+      .select(seedSyms(col("word"), scheme.marker).as("syms"), col("w"))
       .localCheckpoint(true, StorageLevel.DISK_ONLY)
     var vocabIsCheckpoint = true
     // a lazily-persisted round still READS its predecessor's blocks when
@@ -294,33 +379,42 @@ object BpeTrain {
     def release(df: DataFrame, isCheckpoint: Boolean): Unit =
       if (isCheckpoint) org.apache.spark.sql.graftglue.PlanGlue.releaseLocalCheckpoint(df)
       else { df.unpersist(false); () }
+    val mergeSchema = StructType(Seq(
+      StructField("ml_", StringType), StructField("mr_", StringType)))
     try {
       var rank = 0
       var exhausted = false
       while (rank < numMerges && !exhausted) {
-        // TakeOrdered(1): the per-partition heads meet at the driver —
-        // one row of traffic, no full sort of the pair frame; this job
-        // also materializes the round's lazily-persisted vocab, after
-        // which the lagged predecessor has no reader left
-        val top = pairCounts(vocab)
-          .orderBy(col("cnt").desc, col("l"), col("r")).limit(1).collect()
+        val pc = pairCounts(vocab).where(col("cnt") >= minPairCount)
+        val scored =
+          if (!scheme.likelihood) pc.withColumn("score", col("cnt"))
+          else {
+            val sc = WordPieceTrain.symCounts(vocab)
+            pc.join(broadcast(sc.select(col("sym").as("l"), col("c").as("cl"))), Seq("l"))
+              .join(broadcast(sc.select(col("sym").as("r"), col("c").as("cr"))), Seq("r"))
+              .withColumn("score",
+                expr(s"CAST(CAST(cnt AS DECIMAL(38,0)) * $ScoreScale AS DECIMAL(38,0))" +
+                  " div (CAST(cl AS DECIMAL(38,0)) * CAST(cr AS DECIMAL(38,0)))"))
+          }
+        // this job also materializes the round's lazily-persisted vocab,
+        // after which the lagged predecessor has no reader left
+        val top = scored
+          .orderBy(col("score").desc, col("cnt").desc, col("l"), col("r"))
+          .limit(1).select("l", "r", "cnt", "score").collect()
         lagged.foreach { case (df, ck) => release(df, ck) }
         lagged = None
-        if (top.isEmpty || top.head.getLong(2) < minPairCount) exhausted = true
+        if (top.isEmpty) exhausted = true
         else {
-          val (l, r, c) = (top.head.getString(0), top.head.getString(1), top.head.getLong(2))
-          merges += Merge(rank, l, r, c)
+          val row = top.head
+          val (l, r) = (row.getString(0), row.getString(1))
+          merges += PairMerge(rank, l, r, row.getLong(2), row.getLong(3))
           val checkpointRound = (rank + 1) % CheckpointEvery == 0
           // the round's pair as a broadcast 1-row frame (see mergeExpr:
           // identical plan per round ⇒ codegen cache hit)
-          val sess = vocab.sparkSession
-          val mrow = sess.createDataFrame(
-            java.util.Arrays.asList(org.apache.spark.sql.Row(l, r)),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("ml_", org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField("mr_", org.apache.spark.sql.types.StringType))))
+          val mrow = vocab.sparkSession.createDataFrame(
+            java.util.Arrays.asList(Row(l, r)), mergeSchema)
           val transformed = vocab.crossJoin(broadcast(mrow))
-            .withColumn("syms", mergeExpr(col("syms"), col("ml_"), col("mr_")))
+            .withColumn("syms", fuseExpr(col("syms"), col("ml_"), col("mr_"), scheme.marker))
             .drop("ml_", "mr_")
           val next =
             if (checkpointRound) transformed.localCheckpoint(true, StorageLevel.DISK_ONLY)
@@ -490,42 +584,64 @@ object BpeTrain {
 
   /** The DuckDB replay of [[trainMerges]], generated from the same round
     * structure (the kCenterSqlCtes / hilbertSqlCtes one-source-of-truth
-    * rule — an iterative corpus-level argmax loop unrolls into a CTE
-    * chain with one (pair-count, argmax, greedy-merge) block per round).
-    * `table` must expose a `text` column; output matches
+    * rule). `table` must expose a `text` column; output matches
     * `trainMerges(...).toDF()`: (rank, left, right, count) ordered by
-    * rank, early-stop included (a round whose best pair falls below
-    * `minPairCount` emits nothing and every later round is empty too —
-    * the argmax CTE runs dry exactly where the engine loop breaks).
+    * rank, early-stop included. */
+  def mergesSqlCtes(table: String, numMerges: Int, minPairCount: Long = 2L): String =
+    schemeSqlCtes(table, numMerges, minPairCount, Scheme)
+
+  /** A scheme's trainer unrolled into a DuckDB CTE chain, one
+    * (pair-count, argmax, greedy-merge) block per round — plus the
+    * symbol-count block the likelihood objective joins in — under the
+    * [[MergeScheme]] contract. A round whose best pair falls below
+    * `minPairCount` emits nothing and every later round is empty too:
+    * the argmax CTE runs dry exactly where the engine loop breaks. The
+    * likelihood objective appends a `score` column to the output.
     *
     * The greedy fold is replayed relationally: match positions i where
     * (syms[i], syms[i+1]) = the round's pair, gaps-and-islands over
     * consecutive matches (only possible when left = right), keep the
     * odd ranks within each island — byte-for-byte the fold's
     * non-overlapping left-to-right selection — then rebuild each word
-    * as merged tokens at selected positions + untouched symbols
+    * as fused tokens at selected positions + untouched symbols
     * anti-joined against the covered set. CTEs are MATERIALIZED: the
     * inlined form re-evaluates v₀ per reference (and re-opens the
     * parquet until the fd limit), the materialized chain runs each
     * round once. */
-  def mergesSqlCtes(table: String, numMerges: Int, minPairCount: Long = 2L): String = {
+  private[operators] def schemeSqlCtes(table: String, numMerges: Int,
+      minPairCount: Long, scheme: MergeScheme): String = {
     require(numMerges >= 1 && numMerges <= 64,
       s"numMerges $numMerges outside [1, 64]")
     require(minPairCount >= 1L, s"minPairCount $minPairCount must be >= 1")
+    val m = scheme.marker
     val ctes = Seq.newBuilder[String]
     ctes += s"""wv AS MATERIALIZED (SELECT word, CAST(COUNT(*) AS BIGINT) AS w
       |  FROM (SELECT unnest(regexp_extract_all(lower(text),
       |          '${TextOps.BpeTokenPattern}')) AS word FROM $table)
       |  WHERE word <> '' GROUP BY word)""".stripMargin
-    ctes += """v0 AS MATERIALIZED (SELECT ROW_NUMBER() OVER (ORDER BY word) AS wid,
-      |  string_split(word, '') AS syms, w FROM wv)""".stripMargin
+    ctes += s"""v0 AS MATERIALIZED (SELECT ROW_NUMBER() OVER (ORDER BY word) AS wid,
+      |  [CASE WHEN i = 1 THEN cs[i] ELSE '$m' || cs[i] END
+      |   for i in generate_series(1, len(cs))] AS syms, w
+      |  FROM (SELECT word, string_split(word, '') AS cs, w FROM wv))""".stripMargin
     for (r <- 0 until numMerges) {
+      val (score, joins) =
+        if (!scheme.likelihood) ("cnt", "")
+        else {
+          ctes += s"""sc$r AS (SELECT syms[i] AS sym, CAST(SUM(w) AS BIGINT) AS c
+            |  FROM v$r, unnest(generate_series(1, len(syms))) AS u(i)
+            |  GROUP BY 1)""".stripMargin
+          ("""CAST((CAST(cnt AS HUGEINT) * """ + ScoreScale +
+            ") // (CAST(cl.c AS HUGEINT) * CAST(cr.c AS HUGEINT)) AS BIGINT)",
+            s" JOIN sc$r cl ON cl.sym = pc$r.lc JOIN sc$r cr ON cr.sym = pc$r.rc")
+        }
       ctes += s"""pc$r AS (SELECT syms[i] AS lc, syms[i+1] AS rc,
         |    CAST(SUM(w) AS BIGINT) AS cnt
         |  FROM v$r, unnest(generate_series(1, len(syms)-1)) AS u(i)
         |  GROUP BY 1, 2)""".stripMargin
-      ctes += s"""a$r AS MATERIALIZED (SELECT lc, rc, cnt FROM pc$r
-        |  WHERE cnt >= $minPairCount ORDER BY cnt DESC, lc, rc LIMIT 1)""".stripMargin
+      ctes += s"""a$r AS MATERIALIZED (SELECT lc, rc, cnt, $score AS score
+        |  FROM pc$r$joins
+        |  WHERE cnt >= $minPairCount
+        |  ORDER BY score DESC, cnt DESC, lc, rc LIMIT 1)""".stripMargin
       ctes += s"""m$r AS (SELECT wid, i
         |  FROM v$r, a$r, unnest(generate_series(1, len(syms)-1)) AS u(i)
         |  WHERE syms[i] = lc AND syms[i+1] = rc)""".stripMargin
@@ -539,7 +655,9 @@ object BpeTrain {
         |  UNION ALL SELECT wid, i + 1 FROM sel$r)""".stripMargin
       ctes += s"""v${r + 1} AS MATERIALIZED (SELECT wid,
         |    list(tok ORDER BY pos) AS syms, any_value(w) AS w FROM (
-        |    SELECT v.wid, s.i AS pos, v.syms[s.i] || v.syms[s.i+1] AS tok, v.w
+        |    SELECT v.wid, s.i AS pos,
+        |        v.syms[s.i] || CASE WHEN starts_with(v.syms[s.i+1], '$m')
+        |          THEN substr(v.syms[s.i+1], ${m.length + 1}) ELSE v.syms[s.i+1] END AS tok, v.w
         |      FROM v$r v JOIN sel$r s USING (wid)
         |    UNION ALL
         |    SELECT p.wid, p.pos, p.tok, p.w FROM (
@@ -548,9 +666,10 @@ object BpeTrain {
         |      ANTI JOIN cov$r c ON p.wid = c.wid AND p.pos = c.pos
         |  ) GROUP BY wid)""".stripMargin
     }
+    val scoreCol = if (scheme.likelihood) ", score" else ""
     val finals = (0 until numMerges).map(r =>
       s"""SELECT CAST($r AS INTEGER) AS rank, lc AS "left", rc AS "right",
-         |  cnt AS "count" FROM a$r""".stripMargin)
+         |  cnt AS "count"$scoreCol FROM a$r""".stripMargin)
       .mkString("\nUNION ALL ")
     s"WITH ${ctes.result().mkString(",\n")}\n$finals\nORDER BY rank"
   }

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed WordPiece tokenizer TRAINING (Schuster & Nakajima 2012;
   * the BERT tokenizer, Devlin et al. 2019) — the third production
@@ -13,23 +12,9 @@ import org.apache.spark.storage.StorageLevel
   * (the corpus-LM likelihood gain of fusing the pair), and non-initial
   * subwords carry the `##` continuation marker.
   *
-  * Scale shape is [[BpeTrain]]'s, verbatim: ONE corpus→word-vocabulary
-  * aggregation (the only 100 TB-touching step), then per round two
-  * vocab-sized aggregations (adjacent-pair counts + per-symbol counts),
-  * a TakeOrdered(1) argmax (1 row of driver traffic), and the narrow
-  * greedy-merge fold — rounds persisted and periodically
-  * lineage-truncated (the L24 loop discipline).
-  *
-  * Determinism contract (the q90/q215 quantized-space rule): the score
-  * is compared as the EXACT integer `(count(lr) · 10^12) div
-  * (count(l) · count(r))` — decimal-exact in Spark, HUGEINT-exact in the
-  * DuckDB replay — with ties (score DESC, count DESC, l, r). Two pairs
-  * whose true rational scores agree to 12 digits resolve by the pinned
-  * tiebreak identically in both engines, so the merge table is a pure
-  * function of the corpus at any parallelism. The scale keeps every
-  * value bounded: score ≤ 10^12 (count(l), count(r) ≥ count(lr)), and
-  * the decimal products stay ≤ 10^26 ≪ the DECIMAL(38) / int128 range
-  * even at 10^13-token corpora.
+  * Training is [[BpeTrain]]'s shared pair-merge trainer under that
+  * [[BpeTrain.MergeScheme]] — scale shape, exact quantized score and
+  * argmax order are documented there once.
   *
   * Reference scope: EXT (north-star LLM-pipeline surface, SURVEY §2.10);
   * the reference engine has no text operators.
@@ -42,14 +27,11 @@ object WordPieceTrain {
   final case class WpMerge(rank: Int, left: String, right: String,
       count: Long, score: Long)
 
-  /** The score quantization: 12 digits of relative precision. */
-  private val ScoreScale = "1000000000000" // 10^12
+  private[operators] val Scheme = BpeTrain.MergeScheme("##", likelihood = true)
 
   /** word → WordPiece symbol array: one string per code point, every
     * non-initial one `##`-prefixed ("abc" → [a, ##b, ##c]). */
-  def wpSyms(word: Column): Column =
-    transform(BpeTrain.charSyms(word),
-      (c, i) => when(i === 0, c).otherwise(concat(lit("##"), c)))
+  def wpSyms(word: Column): Column = BpeTrain.seedSyms(word, Scheme.marker)
 
   /** Weighted per-symbol occurrence counts over a (`syms`, `w`)
     * vocabulary — columns (sym, c). The denominator side of the score;
@@ -59,22 +41,10 @@ object WordPieceTrain {
       .where(col("sym").isNotNull)
       .groupBy("sym").agg(sum(col("w")).as("c"))
 
-  /** [[BpeTrain.mergeExpr]] with the WordPiece join rule: the fused
-    * element is left + right-stripped-of-`##`. In a well-formed symbol
-    * stream the right element of ANY adjacent pair is a continuation
-    * (only position 1 lacks `##`), but the strip is conditional anyway —
-    * a malformed row degrades to plain concat rather than mangling. */
-  def wpMergeExpr(syms: Column, left: Column, right: Column): Column = {
-    val fused = concat(left,
-      when(right.startsWith("##"), right.substr(lit(3), length(right))).otherwise(right))
-    aggregate(
-      syms,
-      array().cast("array<string>"),
-      (acc, s) =>
-        when(size(acc) > 0 && element_at(acc, -1) === left && s === right,
-          concat(slice(acc, lit(1), size(acc) - 1), array(fused)))
-          .otherwise(concat(acc, array(s))))
-  }
+  /** [[BpeTrain.mergeExpr]] with the WordPiece fuse rule: the fused
+    * element is left + right-stripped-of-`##`. */
+  def wpMergeExpr(syms: Column, left: Column, right: Column): Column =
+    BpeTrain.fuseExpr(syms, left, right, Scheme.marker)
 
   /** Learn up to `numMerges` WordPiece rules from the corpus (pre-
     * tokenization shared with the BPE side: [[BpeTrain.wordVocab]]).
@@ -86,201 +56,13 @@ object WordPieceTrain {
       minPairCount: Long = 2L): Seq[WpMerge] =
     trainMergesFromVocab(BpeTrain.wordVocab(docs, textCol), numMerges, minPairCount)
 
-  private val CheckpointEvery = 8
-
-  /** The merge loop, driver-side, on a collected vocabulary — the
-    * [[BpeTrain.trainMergesDriver]] move with the WordPiece objective:
-    * per round, weighted pair AND symbol counts, the exact integer score
-    * `(cnt · 10¹²) div (c_l · c_r)` (BigInt — same truncating division
-    * as the engine's DECIMAL(38,0) `div` and the oracle's HUGEINT `//`
-    * on these positive operands), argmax (score DESC, cnt DESC, l, r)
-    * under the engine's binary string order, greedy `##`-stripping
-    * replace. Spec-gated equal to the distributed loop. */
-  private[graft] def trainMergesDriver(
-      vocab: Array[(String, Long)],
-      numMerges: Int,
-      minPairCount: Long): Seq[WpMerge] = {
-    val scoreScale = BigInt(ScoreScale)
-    val symIdx = new java.util.HashMap[String, Integer]
-    val symStr = scala.collection.mutable.ArrayBuffer.empty[String]
-    def sid(s: String): Int = {
-      val e = symIdx.get(s)
-      if (e != null) e.intValue
-      else { symIdx.put(s, symStr.size); symStr += s; symStr.size - 1 }
-    }
-    val words = vocab.map { case (w, _) =>
-      val cps = BpeTrain.codePointSyms(w)
-      cps.iterator.zipWithIndex
-        .map { case (c, i) => sid(if (i == 0) c else "##" + c) }.toArray
-    }
-    val weights = vocab.map(_._2)
-    val merges = Seq.newBuilder[WpMerge]
-    var rank = 0
-    var exhausted = false
-    while (rank < numMerges && !exhausted) {
-      val cnt = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-      val symCnt = new java.util.HashMap[Integer, java.lang.Long]()
-      var i = 0
-      while (i < words.length) {
-        val a = words(i)
-        val w = weights(i)
-        var j = 0
-        while (j < a.length) {
-          symCnt.merge(a(j), w, (x, y) => x + y)
-          if (j < a.length - 1)
-            cnt.merge((a(j).toLong << 32) | (a(j + 1).toLong & 0xffffffffL),
-              w, (x, y) => x + y)
-          j += 1
-        }
-        i += 1
-      }
-      // argmax (score DESC, cnt DESC, l, r) over pairs with cnt ≥ min —
-      // ties on the symbol STRINGS in the engine's order
-      var bestK = -1L
-      var bestC = 0L
-      var bestS = Long.MinValue
-      val it = cnt.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        val c = e.getValue.longValue
-        if (c >= minPairCount) {
-          val k = e.getKey.longValue
-          val cl = symCnt.get(Integer.valueOf((k >>> 32).toInt)).longValue
-          val cr = symCnt.get(Integer.valueOf((k & 0xffffffffL).toInt)).longValue
-          val s = ((BigInt(c) * scoreScale) / (BigInt(cl) * BigInt(cr))).toLong
-          val better =
-            if (s != bestS) s > bestS
-            else if (c != bestC) c > bestC
-            else if (bestK < 0L) true
-            else {
-              val lc = BpeTrain.utf8Compare(
-                symStr((k >>> 32).toInt), symStr((bestK >>> 32).toInt))
-              lc < 0 || (lc == 0 && BpeTrain.utf8Compare(
-                symStr((k & 0xffffffffL).toInt),
-                symStr((bestK & 0xffffffffL).toInt)) < 0)
-            }
-          if (better) { bestK = k; bestC = c; bestS = s }
-        }
-      }
-      if (bestK < 0L) exhausted = true
-      else {
-        val li = (bestK >>> 32).toInt
-        val ri = (bestK & 0xffffffffL).toInt
-        val l = symStr(li)
-        val r = symStr(ri)
-        merges += WpMerge(rank, l, r, bestC, bestS)
-        val ni = sid(l + (if (r.startsWith("##")) r.substring(2) else r))
-        var i2 = 0
-        while (i2 < words.length) {
-          val a = words(i2)
-          val n = a.length
-          if (n >= 2) {
-            var rd = 0
-            var wr = 0
-            var merged = false
-            while (rd < n) {
-              if (rd + 1 < n && a(rd) == li && a(rd + 1) == ri) {
-                a(wr) = ni; rd += 2; merged = true
-              } else { a(wr) = a(rd); rd += 1 }
-              wr += 1
-            }
-            if (merged) words(i2) = java.util.Arrays.copyOf(a, wr)
-          }
-          i2 += 1
-        }
-        rank += 1
-      }
-    }
-    merges.result()
-  }
-
-  /** Same, from a prepared (`word`, `w`) vocabulary. Model-sized
-    * vocabularies run the loop driver-side ([[BpeTrain]]'s caps, one
-    * collect, zero per-round jobs); larger ones keep the distributed
-    * rounds — identical merge tables either way (spec-gated). */
+  /** Same, from a prepared (`word`, `w`) vocabulary. */
   def trainMergesFromVocab(
       wordWeights: DataFrame,
       numMerges: Int,
-      minPairCount: Long = 2L): Seq[WpMerge] = {
-    require(numMerges >= 0, s"numMerges $numMerges must be >= 0")
-    require(minPairCount >= 1L, s"minPairCount $minPairCount must be >= 1")
-    BpeTrain.collectVocabIfSmall(wordWeights) match {
-      case Some(vocab) => trainMergesDriver(vocab, numMerges, minPairCount)
-      case None => trainMergesDistributed(wordWeights, numMerges, minPairCount)
-    }
-  }
-
-  /** The distributed merge loop — the path for vocabularies past the
-    * driver caps; [[BpeTrain.trainMergesDistributed]]'s
-    * persist/checkpoint discipline with the score argmax in place of
-    * the frequency argmax. */
-  private[graft] def trainMergesDistributed(
-      wordWeights: DataFrame,
-      numMerges: Int,
-      minPairCount: Long = 2L): Seq[WpMerge] = {
-    val merges = Seq.newBuilder[WpMerge]
-    var vocab = wordWeights
-      .select(wpSyms(col("word")).as("syms"), col("w"))
-      .localCheckpoint(true, StorageLevel.DISK_ONLY)
-    var vocabIsCheckpoint = true
-    var lagged: Option[(DataFrame, Boolean)] = None
-    def release(df: DataFrame, isCheckpoint: Boolean): Unit =
-      if (isCheckpoint) org.apache.spark.sql.graftglue.PlanGlue.releaseLocalCheckpoint(df)
-      else { df.unpersist(false); () }
-    try {
-      var rank = 0
-      var exhausted = false
-      while (rank < numMerges && !exhausted) {
-        val pc = BpeTrain.pairCounts(vocab)
-        val sc = symCounts(vocab)
-        // score = (cnt · 10^12) div (c_l · c_r), exact in DECIMAL(38,0);
-        // the symbol-count side is vocabulary-alphabet-sized (symbols
-        // seen so far) — broadcast-joined onto the pair frame
-        val top = pc
-          .join(broadcast(sc.select(col("sym").as("l"), col("c").as("cl"))), Seq("l"))
-          .join(broadcast(sc.select(col("sym").as("r"), col("c").as("cr"))), Seq("r"))
-          .where(col("cnt") >= minPairCount)
-          .withColumn("score",
-            expr(s"CAST(CAST(cnt AS DECIMAL(38,0)) * $ScoreScale AS DECIMAL(38,0))" +
-              " div (CAST(cl AS DECIMAL(38,0)) * CAST(cr AS DECIMAL(38,0)))"))
-          .orderBy(col("score").desc, col("cnt").desc, col("l"), col("r"))
-          .limit(1)
-          .select("l", "r", "cnt", "score")
-          .collect()
-        lagged.foreach { case (df, ck) => release(df, ck) }
-        lagged = None
-        if (top.isEmpty) exhausted = true
-        else {
-          val row = top.head
-          val (l, r, c, s) =
-            (row.getString(0), row.getString(1), row.getLong(2), row.getLong(3))
-          merges += WpMerge(rank, l, r, c, s)
-          val checkpointRound = (rank + 1) % CheckpointEvery == 0
-          val sess = vocab.sparkSession
-          val mrow = sess.createDataFrame(
-            java.util.Arrays.asList(org.apache.spark.sql.Row(l, r)),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("ml_", org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField("mr_", org.apache.spark.sql.types.StringType))))
-          val transformed = vocab.crossJoin(broadcast(mrow))
-            .withColumn("syms", wpMergeExpr(col("syms"), col("ml_"), col("mr_")))
-            .drop("ml_", "mr_")
-          val next =
-            if (checkpointRound) transformed.localCheckpoint(true, StorageLevel.DISK_ONLY)
-            else transformed.persist(StorageLevel.DISK_ONLY)
-          if (checkpointRound) release(vocab, vocabIsCheckpoint)
-          else lagged = Some((vocab, vocabIsCheckpoint))
-          vocab = next
-          vocabIsCheckpoint = checkpointRound
-          rank += 1
-        }
-      }
-      merges.result()
-    } finally {
-      lagged.foreach { case (df, ck) => release(df, ck) }
-      release(vocab, vocabIsCheckpoint)
-    }
-  }
+      minPairCount: Long = 2L): Seq[WpMerge] =
+    BpeTrain.trainVocab(wordWeights, numMerges, minPairCount, Scheme)
+      .map(m => WpMerge(m.rank, m.left, m.right, m.count, m.score))
 
   // ---- encode (apply a trained vocabulary) ----
 
@@ -289,8 +71,7 @@ object WordPieceTrain {
     * against. Driver-side; call with the `syms` the trainer started from
     * (or rebuild from words). */
   def vocabFromMerges(seedSyms: Iterable[String], merges: Seq[WpMerge]): Set[String] =
-    seedSyms.toSet ++ merges.map(m =>
-      m.left + (if (m.right.startsWith("##")) m.right.drop(2) else m.right))
+    seedSyms.toSet ++ merges.map(m => m.left + m.right.stripPrefix(Scheme.marker))
 
   /** WordPiece ENCODING is greedy longest-match-first against the final
     * vocabulary (the BERT tokenizer), NOT merge replay: consume the
@@ -331,67 +112,10 @@ object WordPieceTrain {
     }
   }
 
-  /** The DuckDB replay of [[trainMerges]], generated from the same round
-    * structure ([[BpeTrain.mergesSqlCtes]] with the likelihood argmax —
-    * the kCenter/hilbert one-source-of-truth rule). Output matches
+  /** The DuckDB replay of [[trainMerges]] ([[BpeTrain.schemeSqlCtes]]
+    * under the WordPiece scheme). Output matches
     * `trainMerges(...).toDF()`: (rank, left, right, count, score)
     * ordered by rank, early-stop included. */
-  def mergesSqlCtes(table: String, numMerges: Int, minPairCount: Long = 2L): String = {
-    require(numMerges >= 1 && numMerges <= 64,
-      s"numMerges $numMerges outside [1, 64]")
-    require(minPairCount >= 1L, s"minPairCount $minPairCount must be >= 1")
-    val ctes = Seq.newBuilder[String]
-    ctes += s"""wv AS MATERIALIZED (SELECT word, CAST(COUNT(*) AS BIGINT) AS w
-      |  FROM (SELECT unnest(regexp_extract_all(lower(text),
-      |          '${graft.functions.TextOps.BpeTokenPattern}')) AS word FROM $table)
-      |  WHERE word <> '' GROUP BY word)""".stripMargin
-    ctes += """v0 AS MATERIALIZED (SELECT ROW_NUMBER() OVER (ORDER BY word) AS wid,
-      |  [CASE WHEN i = 1 THEN cs[i] ELSE '##' || cs[i] END
-      |   for i in generate_series(1, len(cs))] AS syms, w
-      |  FROM (SELECT word, string_split(word, '') AS cs, w FROM wv))""".stripMargin
-    for (r <- 0 until numMerges) {
-      ctes += s"""sc$r AS (SELECT syms[i] AS sym, CAST(SUM(w) AS BIGINT) AS c
-        |  FROM v$r, unnest(generate_series(1, len(syms))) AS u(i)
-        |  GROUP BY 1)""".stripMargin
-      ctes += s"""pc$r AS (SELECT syms[i] AS lc, syms[i+1] AS rc,
-        |    CAST(SUM(w) AS BIGINT) AS cnt
-        |  FROM v$r, unnest(generate_series(1, len(syms)-1)) AS u(i)
-        |  GROUP BY 1, 2)""".stripMargin
-      ctes += s"""a$r AS MATERIALIZED (SELECT lc, rc, cnt,
-        |    CAST((CAST(cnt AS HUGEINT) * $ScoreScale)
-        |         // (CAST(cl.c AS HUGEINT) * CAST(cr.c AS HUGEINT)) AS BIGINT) AS score
-        |  FROM pc$r JOIN sc$r cl ON cl.sym = pc$r.lc
-        |            JOIN sc$r cr ON cr.sym = pc$r.rc
-        |  WHERE cnt >= $minPairCount
-        |  ORDER BY score DESC, cnt DESC, lc, rc LIMIT 1)""".stripMargin
-      ctes += s"""m$r AS (SELECT wid, i
-        |  FROM v$r, a$r, unnest(generate_series(1, len(syms)-1)) AS u(i)
-        |  WHERE syms[i] = lc AND syms[i+1] = rc)""".stripMargin
-      ctes += s"""sel$r AS MATERIALIZED (SELECT wid, i FROM (
-        |    SELECT wid, i, ROW_NUMBER() OVER (PARTITION BY wid, g ORDER BY i) AS rn
-        |    FROM (SELECT wid, i,
-        |            i - ROW_NUMBER() OVER (PARTITION BY wid ORDER BY i) AS g
-        |          FROM m$r))
-        |  WHERE rn % 2 = 1)""".stripMargin
-      ctes += s"""cov$r AS (SELECT wid, i AS pos FROM sel$r
-        |  UNION ALL SELECT wid, i + 1 FROM sel$r)""".stripMargin
-      ctes += s"""v${r + 1} AS MATERIALIZED (SELECT wid,
-        |    list(tok ORDER BY pos) AS syms, any_value(w) AS w FROM (
-        |    SELECT v.wid, s.i AS pos,
-        |        v.syms[s.i] || CASE WHEN v.syms[s.i+1] LIKE '##%'
-        |          THEN substr(v.syms[s.i+1], 3) ELSE v.syms[s.i+1] END AS tok, v.w
-        |      FROM v$r v JOIN sel$r s USING (wid)
-        |    UNION ALL
-        |    SELECT p.wid, p.pos, p.tok, p.w FROM (
-        |      SELECT v.wid, u.i AS pos, v.syms[u.i] AS tok, v.w
-        |        FROM v$r v, unnest(generate_series(1, len(v.syms))) AS u(i)) p
-        |      ANTI JOIN cov$r c ON p.wid = c.wid AND p.pos = c.pos
-        |  ) GROUP BY wid)""".stripMargin
-    }
-    val finals = (0 until numMerges).map(r =>
-      s"""SELECT CAST($r AS INTEGER) AS rank, lc AS "left", rc AS "right",
-         |  cnt AS "count", score FROM a$r""".stripMargin)
-      .mkString("\nUNION ALL ")
-    s"WITH ${ctes.result().mkString(",\n")}\n$finals\nORDER BY rank"
-  }
+  def mergesSqlCtes(table: String, numMerges: Int, minPairCount: Long = 2L): String =
+    BpeTrain.schemeSqlCtes(table, numMerges, minPairCount, Scheme)
 }

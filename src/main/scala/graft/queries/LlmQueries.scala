@@ -1315,15 +1315,15 @@ object LlmQueries extends QueryGroup {
   val q78 = QueryDef(
     "q78_bpe_train_merges",
     "BPE tokenizer TRAINING (merge-rule induction, Sennrich 2016): one " +
-      "corpus→vocabulary aggregation, then 16 rounds of vocab-sized " +
-      "pair-count + TakeOrdered(1) argmax + narrow greedy-merge fold — " +
-      "persisted per round, lineage-truncated every 8th; the merge table " +
-      "is the model. FULL hash oracle via generated SQL (the q215 " +
+      "corpus→vocabulary aggregation, then 16 rounds of pair-count + " +
+      "argmax + greedy-merge over the model-sized vocabulary (driver-side " +
+      "under the vocab caps, distributed rounds above them); the merge " +
+      "table is the model. FULL hash oracle via generated SQL (the q215 " +
       "kCenterSqlCtes technique applied to the merge loop): one " +
       "(pair-count, argmax, gaps-and-islands greedy merge) CTE block " +
       "per round, unrolled from the same round structure the engine " +
-      "runs — converted from rows-only in r13; the trainer is also " +
-      "equivalence-tested against a sequential reference in BpeTrainSpec",
+      "runs; the trainer is also equivalence-tested against a " +
+      "sequential reference in BpeTrainSpec",
     (s, dir) => {
       import s.implicits._
       BpeTrain.trainMerges(t(s, dir, "documents"), numMerges = 16)
@@ -5443,8 +5443,8 @@ object LlmQueries extends QueryGroup {
       "HUGEINT-exact in DuckDB, ties (score, cnt, l, r) - so the merge " +
       "table is corpus-deterministic at any parallelism; FULL generated-" +
       "SQL hash oracle (one symbol-count + pair-count + score-argmax + " +
-      "gaps-and-islands greedy-merge CTE block per round, the q78/q215 " +
-      "technique)",
+      "gaps-and-islands greedy-merge CTE block per round, generated by " +
+      "the same scheme-driven trainer as q78's)",
     (s, dir) => {
       import s.implicits._
       WordPieceTrain.trainMerges(t(s, dir, "documents"), numMerges = 12)

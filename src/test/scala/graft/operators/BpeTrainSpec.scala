@@ -147,19 +147,44 @@ class BpeTrainSpec extends SparkSpecBase {
     }
   }
 
+  private lazy val fixtureWords = fixtureTexts.take(60)
+    .flatMap(t => TextOps.BpeTokenPattern.r.findAllIn(t.toLowerCase))
+    .groupBy(identity).map { case (w, g) => (w, g.size.toLong) }.toSeq
+
   test("driver-side and distributed merge loops produce identical tables") {
-    // the public trainMergesFromVocab picks a branch by vocab size (the
-    // r20 execution-strategy gate); this pins the two branches EQUAL on
-    // the same vocab so the gate can never change a declared result
+    // the public trainMergesFromVocab picks a branch by vocab size; this
+    // pins the two branches EQUAL on the same vocab so the size gate can
+    // never change a declared result
     val s = spark; import s.implicits._
-    val words = fixtureTexts.take(60)
-      .flatMap(t => TextOps.BpeTokenPattern.r.findAllIn(t.toLowerCase))
-      .groupBy(identity).map { case (w, g) => (w, g.size.toLong) }.toSeq
+    val words = fixtureWords
     val df = words.toDF("word", "w").repartition(5)
-    val dist = BpeTrain.trainMergesDistributed(df, 12, 2L)
-    val drv = BpeTrain.trainMergesDriver(words.toArray, 12, 2L)
+    val dist = BpeTrain.trainMergesDistributed(df, 12, 2L, BpeTrain.Scheme)
+    val drv = BpeTrain.trainMergesDriver(words.toArray, 12, 2L, BpeTrain.Scheme)
     assert(drv === dist)
     assert(drv.nonEmpty, "fixture must actually train some merges")
+  }
+
+  private def cacheEntries(): Int = {
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+    cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int]
+  }
+
+  test("the distributed merge loop persists nothing that outlives it, under both objectives") {
+    // 12 rounds cross the round-8 checkpoint, so both release paths (the
+    // lagged persist and the eager checkpoint) run
+    val s = spark; import s.implicits._
+    for (scheme <- Seq(BpeTrain.Scheme, WordPieceTrain.Scheme)) {
+      // an identical plan cached by an earlier test would absorb a new persist
+      spark.catalog.clearCache()
+      val rdds0 = spark.sparkContext.getPersistentRDDs.keySet
+      val cache0 = cacheEntries()
+      val got = BpeTrain.trainMergesDistributed(
+        fixtureWords.toDF("word", "w").repartition(3), 12, 2L, scheme)
+      assert(got.size === 12, s"$scheme must run all 12 rounds")
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- rdds0
+      assert(leaked.isEmpty, s"$scheme: persisted RDDs left behind: $leaked")
+      assert(cacheEntries() === cache0, s"$scheme: CacheManager entries left behind")
+    }
   }
 
   test("driver argmax tiebreak uses the engine's UTF-8 order, not UTF-16") {
@@ -173,8 +198,8 @@ class BpeTrainSpec extends SparkSpecBase {
     val s = spark; import s.implicits._
     val words = Seq(("\uE000x", 3L), ("🙂x", 3L))
     val dist = BpeTrain.trainMergesDistributed(
-      words.toDF("word", "w"), numMerges = 1, minPairCount = 2L)
-    val drv = BpeTrain.trainMergesDriver(words.toArray, 1, 2L)
+      words.toDF("word", "w"), 1, 2L, BpeTrain.Scheme)
+    val drv = BpeTrain.trainMergesDriver(words.toArray, 1, 2L, BpeTrain.Scheme)
     assert(drv === dist)
     assert(drv.head.left === "\uE000", "code-point order must win the tie")
   }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpecBase
+import graft.core.Tables
 import org.apache.spark.sql.functions._
 
 /** [[WordPieceTrain]] gates: distributed training equals a sequential
@@ -106,17 +107,51 @@ class WordPieceTrainSpec extends SparkSpecBase {
   }
 
   test("driver-side and distributed merge loops produce identical tables") {
-    // the r20 execution-strategy gate: both branches of
-    // trainMergesFromVocab must agree on the same vocab (and with the
-    // sequential reference) so the size gate can never change a result
+    // both branches of trainMergesFromVocab must agree on the same vocab
+    // (and with the sequential reference) so the size gate can never
+    // change a result
     for (seed <- Seq(5L, 17L, 99L)) {
       val words = randomWords(seed)
-      val dist = WordPieceTrain.trainMergesDistributed(
-        words.toSeq.toDF("word", "w").repartition(3), 8)
-      val drv = WordPieceTrain.trainMergesDriver(words.toArray, 8, 2L)
+      val dist = BpeTrain.trainMergesDistributed(
+        words.toSeq.toDF("word", "w").repartition(3), 8, 2L, WordPieceTrain.Scheme)
+      val drv = BpeTrain.trainMergesDriver(words.toArray, 8, 2L, WordPieceTrain.Scheme)
       assert(drv === dist, s"seed=$seed")
       assert(drv.map(m => (m.rank, m.left, m.right, m.count, m.score)) ===
         refTrain(words, 8), s"seed=$seed vs reference")
+    }
+  }
+
+  test("driver argmax tiebreak uses the engine's UTF-8 order, not UTF-16") {
+    // (\uE000, ##x) and (🙂, ##x) tie on score and count; U+E000 sorts
+    // below U+1F642 in code-point order (Spark, DuckDB) but above it in
+    // Java String order, so both branches must resolve it by code point
+    val words = Seq(("\uE000x", 3L), ("🙂x", 3L))
+    val dist = BpeTrain.trainMergesDistributed(
+      words.toDF("word", "w"), 1, 2L, WordPieceTrain.Scheme)
+    val drv = BpeTrain.trainMergesDriver(words.toArray, 1, 2L, WordPieceTrain.Scheme)
+    assert(drv === dist)
+    assert(drv.head.left === "\uE000", "code-point order must win the tie")
+  }
+
+  test("vocabFromMerges over the seed symbols encodes every training word") {
+    val docs = Tables.load(spark, sfDir, "documents")
+    val words = BpeTrain.wordVocab(docs).select("word").as[String].collect().toSeq
+    val merges = WordPieceTrain.trainMerges(docs, numMerges = 24)
+    val seeds = words.flatMap(w => BpeTrain.codePointSyms(w).zipWithIndex.map {
+      case (c, i) => if (i == 0) c else "##" + c
+    })
+    val vocab = WordPieceTrain.vocabFromMerges(seeds, merges)
+    words.foreach { w =>
+      val pieces = WordPieceTrain.encodeWord(w, vocab)
+      assert(!pieces.contains("[UNK]"), s"word '$w' -> $pieces")
+      assert(pieces.map(_.stripPrefix("##")).mkString === w, s"word '$w' -> $pieces")
+    }
+    val continued = merges.filter(_.left.startsWith("##"))
+    assert(continued.nonEmpty, "fixture must train a ##-initial left piece")
+    continued.foreach { m =>
+      val piece = m.left + m.right.stripPrefix("##")
+      assert(vocab.contains(piece), s"merge $m")
+      assert(piece.startsWith("##") && !piece.drop(2).contains("##"), s"piece '$piece'")
     }
   }
 
