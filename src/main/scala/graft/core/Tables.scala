@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.functions._
 
 /** Loaders for the ten driver-generated test tables (TESTDATA.md / FIXTURES.md).
@@ -13,6 +14,14 @@ import org.apache.spark.sql.functions._
   * TIMESTAMP — and (round 10+) native TIMESTAMP(MICROS), which already
   * arrives as TIMESTAMP_NTZ. The loader dispatches on the OBSERVED type, so
   * both generations produce byte-identical TIMESTAMP_NTZ instants.
+  *
+  * [[load]] hands Spark the schema its inference would produce, read from
+  * the table file's footer on the driver with Spark's own footer reader
+  * and conversion (`FooterSchema`), so a load plans without the one-task
+  * schema-inference job Spark otherwise launches per read. A directory
+  * path (a partitioned or multi-file layout) and a session with
+  * `spark.sql.parquet.mergeSchema` on keep Spark's inference. Either way
+  * the driver reads one footer at most, whatever the table's size.
   */
 object Tables {
 
@@ -24,7 +33,10 @@ object Tables {
     // Read-path requirement for events.parquet (TIMESTAMP(NANOS)); a runtime
     // SQLConf, safe to set idempotently.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = FooterSchema.of(spark, path)
+      .fold(spark.read)(spark.read.schema)
+      .parquet(path)
     name match {
       case "events" =>
         df.schema("ts").dataType match {

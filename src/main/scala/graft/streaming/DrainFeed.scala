@@ -20,9 +20,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
   * The sentinel's own slot stays open, so no third batch runs. The
   * drained frame is a pure function of the per-key tick multiset.
   *
-  * Three settings are scoped to the replay's query: set before
-  * `start()`, restored right after (a started query clones the session
-  * conf, so they never reach the caller):
+  * Four settings are scoped to the replay's query: set before `start()`,
+  * restored right after (a started query clones the session conf, so
+  * they never reach the caller):
   *  - `spark.sql.shuffle.partitions` is sized to the driven key count
   *    (+1 sentinel). With K keys at most K state partitions hold rows,
   *    and every extra one pays a state-store open, commit and delta file
@@ -31,14 +31,25 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
   *  - `spark.sql.streaming.noDataMicroBatches.enabled=true`: batch 2 is
   *    a no-data batch, so a caller session that turned them off would
   *    strand every window.
-  *  - `spark.sql.streaming.checkpointFileManagerClass` names Hadoop's
-  *    `FileSystem`-based manager for the offset log, the commit log and
-  *    the state store. Spark's default goes through the local
-  *    `FileContext`, which without the native Hadoop library forks
-  *    `readlink` and `chmod` processes for every checkpoint file. The
-  *    replay checkpoints into Spark's temporary local directory, where a
-  *    rename is atomic, and the checksummed local file system still
-  *    writes the `.crc` files.
+  *  - `spark.sql.streaming.checkpointFileManagerClass` names
+  *    [[LocalCheckpointFileManager]] for the offset log, the commit log
+  *    and the state store: Spark's `FileSystem`-based manager over a
+  *    local file system that sets permissions in-process. Spark's
+  *    default goes through the local `FileContext`, and Hadoop's local
+  *    file system sets every file's permissions, both of which fork
+  *    `readlink` or `chmod` processes without the native Hadoop library.
+  *    The replay checkpoints into Spark's temporary local directory,
+  *    where a rename is atomic, and the checksummed local file system
+  *    still writes the `.crc` files.
+  *  - `spark.sql.artifact.isolation.enabled=false`: a started query runs
+  *    on a clone of the session, and with isolation on every clone gets
+  *    a fresh artifact id, so executors build it a classloader of its
+  *    own. Generated code is cached per (classloader, source), so each
+  *    replay would recompile its whole plan. Off, the clone shares the
+  *    executors' default classloader and a repeated replay reuses the
+  *    classes the previous one compiled. The replay runs only engine
+  *    code, and the engine adds no artifacts to a session, so there is
+  *    nothing to isolate.
   *
   * The set/restore window is not safe against a concurrent query build
   * on the same session: every caller builds one query at a time.
@@ -60,8 +71,7 @@ private[streaming] object DrainFeed {
   private val ShufflePartitions = "spark.sql.shuffle.partitions"
   private val NoDataBatches = "spark.sql.streaming.noDataMicroBatches.enabled"
   private val CheckpointManager = "spark.sql.streaming.checkpointFileManagerClass"
-  private val FileSystemManager =
-    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+  private val ArtifactIsolation = "spark.sql.artifact.isolation.enabled"
 
   /** Replay a BATCH tick frame through a live monitor and return its
     * drained window frame: collect at most `maxDriveRows` ticks in one
@@ -121,7 +131,8 @@ private[streaming] object DrainFeed {
       val q = withScopedConf(spark, Seq(
           ShufflePartitions -> scopedParts.toString,
           NoDataBatches -> "true",
-          CheckpointManager -> FileSystemManager)) {
+          CheckpointManager -> classOf[LocalCheckpointFileManager].getName,
+          ArtifactIsolation -> "false")) {
         build(ms.toDS()).writeStream.outputMode("append")
           .format("memory").queryName(sink).start()
       }

@@ -1005,40 +1005,6 @@ class DedupSpec extends SparkSpecBase {
     assert(cal.nonEmpty)
   }
 
-  /** Spark jobs `body` starts, counted by a listener on jobs tagged with a
-    * local property. The bus delivers events in order, so once a second,
-    * differently tagged job has ended every earlier job start was seen. */
-  private def jobsStarted(body: => Unit): Int = {
-    import org.apache.spark.scheduler._
-    val sc = spark.sparkContext
-    val key = "graft.spec.jobs"
-    val counted = new java.util.concurrent.atomic.AtomicInteger()
-    val barrierIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(key)).orNull match {
-          case "count" => counted.incrementAndGet()
-          case "barrier" => barrierIds.add(e.jobId)
-          case _ =>
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (barrierIds.contains(e.jobId)) flushed.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, "count")
-      body
-      sc.setLocalProperty(key, "barrier")
-      sc.parallelize(Seq(1), 1).count()
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus flush")
-      counted.get
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   /** Entries in the session's `CacheManager`; the count is `private[sql]`
     * in Scala but a public JVM method, so it is read reflectively. */
   private def cacheEntries(): Int = {

@@ -12,8 +12,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   * the sentinel key never reaches the result, a `maxDriveRows` cap
   * drives exactly the first rows in (tsUs, key, value) order, the drive
   * takes two micro-batches, its scoped settings never reach the caller's
-  * session, and its memory-sink view is dropped even when the stream
-  * fails. */
+  * session, its memory-sink view is dropped even when the stream fails, a
+  * repeated replay reuses the generated classes of the first, and a
+  * replay starts no process. */
 class DrainFeedSpec extends SparkSpecBase {
 
   private val Bucket = 1000000L
@@ -21,7 +22,8 @@ class DrainFeedSpec extends SparkSpecBase {
   private val ScopedKeys = Seq(
     "spark.sql.shuffle.partitions",
     "spark.sql.streaming.noDataMicroBatches.enabled",
-    "spark.sql.streaming.checkpointFileManagerClass")
+    "spark.sql.streaming.checkpointFileManagerClass",
+    "spark.sql.artifact.isolation.enabled")
 
   private def ticks = {
     val s = spark
@@ -107,6 +109,7 @@ class DrainFeedSpec extends SparkSpecBase {
       assert(scopedConf === before)
       assert(spark.conf.getOption(noData) === Some("false"))
       assert(!spark.conf.getAll.contains("spark.sql.streaming.checkpointFileManagerClass"))
+      assert(!spark.conf.getAll.contains("spark.sql.artifact.isolation.enabled"))
     } finally wasSet match {
       case Some(v) => spark.conf.set(noData, v)
       case None => spark.conf.unset(noData)
@@ -128,5 +131,85 @@ class DrainFeedSpec extends SparkSpecBase {
     }
     assert(!spark.catalog.listTables().collect().exists(_.name.startsWith("hh_fail_")))
     assert(scopedConf === before)
+  }
+
+  /** Commands of the processes this JVM starts while `body` runs, seen by
+    * a JFR stream on `jdk.ProcessStart`. A marker process started after
+    * `body` bounds the count: the stream delivers events in time order,
+    * and every event committed before the marker's is flushed with it or
+    * earlier. Starts on a `java.lang.ref.Cleaner` thread are left out: a
+    * garbage-collected session's artifact manager deletes its directory
+    * there (`rm -rf`), whenever the collector gets to it. */
+  private def processStarts(body: => Unit): Seq[String] = {
+    import jdk.jfr.consumer.RecordingStream
+    val marker = "graft-drainfeed-spec-marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val markerSeen = new CountDownLatch(1)
+    val rs = new RecordingStream()
+    try {
+      rs.enable("jdk.ProcessStart")
+      rs.onEvent("jdk.ProcessStart", e => {
+        val cmd = e.getString("command")
+        val thread = Option(e.getThread).map(_.getJavaName).getOrElse("")
+        if (cmd.contains(marker)) markerSeen.countDown()
+        else if (markerSeen.getCount > 0 && !thread.startsWith("Cleaner-")) seen.add(cmd)
+      })
+      rs.startAsync()
+      body
+      new ProcessBuilder("true", marker).start().waitFor()
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "the JFR stream never saw the marker process")
+    } finally rs.close()
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
+  }
+
+  test("a replay starts no process: its checkpoint files get their permissions in-process") {
+    drained // warm: one-time probes (Hadoop's shell utilities) stay out of the count
+    // the counter sees a process `body` starts
+    assert(processStarts(new ProcessBuilder("true").start().waitFor()).size === 1)
+    var got = Seq.empty[Seq[Any]]
+    val starts = processStarts { got = drained }
+    assert(got.nonEmpty)
+    assert(starts === Seq.empty)
+  }
+
+  test("a repeated replay reuses the generated classes of the first") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val first = drained
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(drained === first)
+    // the 3 left are the state (de)serializers of HhState's maps: their
+    // lambda variables get fresh ids in every query
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before <= 3)
+  }
+
+  test("the local checkpoint manager writes Spark's checkpoint files with Spark's permissions") {
+    import java.nio.file.{Files, Path => JPath}
+    import java.nio.file.attribute.PosixFilePermissions
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
+    val conf = spark.sparkContext.hadoopConfiguration
+    /** Each file and directory under the root a manager writes a commit
+      * log's worth of files into, with its permission string. */
+    def tree(make: (Path, org.apache.hadoop.conf.Configuration) => CheckpointFileManager) = {
+      val root = Files.createTempDirectory("graft_ckpt")
+      val mgr = make(new Path(root.toUri), conf)
+      mgr.mkdirs(new Path(root.toUri.toString + "/commits"))
+      for (i <- 0 until 2) {
+        val out = mgr.createAtomic(new Path(root.toUri.toString + s"/commits/$i"), overwriteIfPossible = false)
+        out.write(s"v1\n{\"batch\":$i}".getBytes("UTF-8"))
+        out.close()
+      }
+      import scala.jdk.CollectionConverters._
+      val walk = Files.walk(root)
+      try walk.iterator.asScala.filter(_ != root).map { (p: JPath) =>
+        root.relativize(p).toString -> PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+      }.toMap
+      finally walk.close()
+    }
+    val ours = tree(new LocalCheckpointFileManager(_, _))
+    val sparks = tree(new FileSystemBasedCheckpointFileManager(_, _))
+    assert(ours.keySet === Set("commits", "commits/0", "commits/.0.crc", "commits/1", "commits/.1.crc"))
+    assert(ours === sparks)
   }
 }
